@@ -149,6 +149,18 @@ def lsh_signatures(
     """
     if planes is None:
         planes = pinned_hyperplanes()
+    n_tables = 1 + max(t for t, _, _ in planes)
+    bits = 1 + max(j for _, j, _ in planes)
+    # the kernel reshapes each row's plane dots to (tables, bits): that
+    # is its signature only when the planes form the dense (t, j) grid
+    # — a missing or repeated pair would silently shift every bit after
+    grid = {(t, j) for t in range(n_tables) for j in range(bits)}
+    if (len(planes) != n_tables * bits
+            or {(t, j) for t, j, _ in planes} != grid):
+        raise ValueError(
+            f"planes must cover every (table, bit) pair of the "
+            f"{n_tables} x {bits} grid exactly once"
+        )
     plane_dim = len(planes[0][2])
     if data_dim is None:
         data_dim = _vec_dim(df, vec_col)
@@ -159,8 +171,6 @@ def lsh_signatures(
         )
     from .multimodal import _spread
 
-    n_tables = 1 + max(t for t, _, _ in planes)
-    bits = 1 + max(j for _, j, _ in planes)
     # plane matrix in (t, j) row order — pinned_hyperplanes emits t-major
     plane_rows = sorted(planes, key=lambda p: (p[0], p[1]))
     base = df.filter(F.col(vec_col).isNotNull()).select(

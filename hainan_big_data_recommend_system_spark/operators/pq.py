@@ -77,11 +77,16 @@ def _books_np(codebooks: list[list[list[int]]]):
 def _to_matrix(series, need_dim: int):
     """Arrow column of vectors → (n, need_dim) int64 matrix, rejecting
     ragged rows (mixed dimensionality builds an object-dtype array —
-    the in-kernel backstop behind the one-row driver probe)."""
+    the in-kernel backstop behind the one-row driver probe).  Row
+    lengths are checked BEFORE building the array: NumPy >= 1.24
+    refuses a ragged list with its own "inhomogeneous shape" error."""
     import numpy as np
 
-    x = np.array(series.tolist())
-    if x.dtype == object or x.ndim != 2 or x.shape[1] != need_dim:
+    rows = series.tolist()
+    ragged = any(r is None or len(r) != need_dim for r in rows)
+    x = None if ragged else np.array(rows)
+    if x is None or x.dtype == object or x.ndim != 2 \
+            or x.shape[1] != need_dim:
         raise ValueError(
             f"mixed or wrong vector dimensionality in batch (need "
             f"{need_dim} per row); clean the corpus or refit codebooks"

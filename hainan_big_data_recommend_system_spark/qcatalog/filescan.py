@@ -1177,7 +1177,7 @@ def q_delta_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.deltalog import prune_by_partition, replay_delta_log
     from ..sources.delta_sink import read_log_commits
 
-    from ..sources.delta_sink import (
+    from ..sources.lake_core import (
         _attach_partition_columns,
         _scan_with_positions,
     )
@@ -1249,11 +1249,8 @@ def q_delta_dv_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the delete, which is the entire point: at 100 TB a DELETE
     touches kilobytes of bitmaps, not terabytes of parquet."""
     from ..operators.deltalog import replay_delta_log
-    from ..sources.delta_sink import (
-        _abs_uri,
-        _dead_positions_df,
-        read_log_commits,
-    )
+    from ..sources.delta_sink import _dead_positions_df, read_log_commits
+    from ..sources.lake_core import _abs_uri
 
     fixture = _ensure_dv_delete_fixture(spark, sf_dir)
     commits = read_log_commits(fixture)
@@ -1335,7 +1332,7 @@ def q_iceberg_partition_pruning(
     100 TB shape: both table formats answer a partition-constrained
     query by never listing the other partitions' files."""
     from ..operators.deltalog import prune_by_partition
-    from ..sources.delta_sink import (
+    from ..sources.lake_core import (
         _attach_partition_columns,
         _scan_with_positions,
     )
@@ -1475,7 +1472,7 @@ def q_iceberg_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     file count, and that the data files' (path, size) set is
     byte-identical before and after — a DELETE at 100 TB touches one
     delete file, not terabytes of parquet."""
-    from ..sources.delta_sink import _abs_uri
+    from ..sources.lake_core import _abs_uri
     from ..sources.iceberg_sink import read_table
 
     fixture = _ensure_iceberg_posdel_fixture(spark, sf_dir)
@@ -1586,12 +1583,12 @@ def q_delta_cdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     would."""
     from ..operators.deltalog import replay_delta_log
     from ..sources.delta_sink import (
-        _abs_uri,
         _dead_positions_df,
         read_changes,
         read_log_commits,
         snapshot,
     )
+    from ..sources.lake_core import _abs_uri
 
     fixture = _ensure_delta_cdf_fixture(spark, sf_dir)
     changes = read_changes(spark, fixture, 0, 2)
@@ -1698,11 +1695,8 @@ def q_delta_restore_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     failed to remove the overwrite's files hash-mismatches.  History
     stays intact: the restore is version 3 of a 4-commit log."""
     from ..operators.deltalog import replay_delta_log
-    from ..sources.delta_sink import (
-        _abs_uri,
-        _dead_positions_df,
-        read_log_commits,
-    )
+    from ..sources.delta_sink import _dead_positions_df, read_log_commits
+    from ..sources.lake_core import _abs_uri
 
     fixture = _ensure_delta_restore_fixture(spark, sf_dir)
     commits = read_log_commits(fixture)
@@ -1778,11 +1772,8 @@ def q_delta_update_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     missed rows, double-applied, or resurrected old versions
     hash-mismatches."""
     from ..operators.deltalog import replay_delta_log
-    from ..sources.delta_sink import (
-        _abs_uri,
-        _dead_positions_df,
-        read_log_commits,
-    )
+    from ..sources.delta_sink import _dead_positions_df, read_log_commits
+    from ..sources.lake_core import _abs_uri
 
     fixture = _ensure_delta_update_fixture(spark, sf_dir)
     commits = read_log_commits(fixture)
@@ -1905,11 +1896,8 @@ def q_delta_merge_clauses_roundtrip(
     ``originals_untouched`` pins that no pre-existing data file was
     rewritten."""
     from ..operators.deltalog import replay_delta_log
-    from ..sources.delta_sink import (
-        _abs_uri,
-        _dead_positions_df,
-        read_log_commits,
-    )
+    from ..sources.delta_sink import _dead_positions_df, read_log_commits
+    from ..sources.lake_core import _abs_uri
 
     fixture = _ensure_delta_merge_clauses_fixture(spark, sf_dir)
     commits = read_log_commits(fixture)
@@ -2314,7 +2302,7 @@ def q_iceberg_hidden_partitioning(
     that opened every partition, or skipped one holding matches,
     hash-mismatches; the surviving rows replay against the events
     table directly."""
-    from ..sources.delta_sink import _prune_dml_paths
+    from ..sources.lake_core import _prune_dml_paths
     from ..sources.iceberg_sink import (
         _alive_rows_with_positions,
         _declared_types,
@@ -2416,11 +2404,11 @@ def q_delta_generated_partitioning(
     hash-mismatches too."""
     from ..sources.delta_sink import (
         _generated_transforms,
-        _prune_dml_paths,
         read_delta_table,
         snapshot,
         snapshot_as_of,
     )
+    from ..sources.lake_core import _prune_dml_paths
 
     fixture = _ensure_delta_genpart_fixture(spark, sf_dir)
     cur = snapshot(fixture)
@@ -3224,11 +3212,8 @@ def q_delta_null_pruning(spark: SparkSession,
     half-null / all-null file) must have opened exactly the two
     null-bearing files, recomputed here on the pre-delete snapshot;
     the surviving rows replay against the oracle."""
-    from ..sources.delta_sink import (
-        _prune_dml_paths,
-        read_delta_table,
-        snapshot_as_of,
-    )
+    from ..sources.delta_sink import read_delta_table, snapshot_as_of
+    from ..sources.lake_core import _prune_dml_paths
 
     fixture = _ensure_null_prune_fixture(spark, sf_dir, "delta")
     pre = snapshot_as_of(fixture, 0)
@@ -3249,7 +3234,7 @@ def q_iceberg_null_pruning(spark: SparkSession,
     """`delta_null_pruning`'s format-#2 twin: spec manifest field 110
     ``null_value_counts`` drives the SAME lever (round 14 — format
     parity for IS [NOT] NULL skipping)."""
-    from ..sources.delta_sink import _prune_dml_paths
+    from ..sources.lake_core import _prune_dml_paths
     from ..sources.iceberg_sink import (
         _declared_types,
         _prev_state,

@@ -362,6 +362,10 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows = []
             for did, text in zip(pdf["doc_id"], pdf["text"]):
                 did = int(did)
+                # NULL text has no bytes to count or digest (NULL, like
+                # the SQL length/sha2 columns); the image generators
+                # seed from its str() spelling
+                null_text = text is None
                 tb = str(text).encode("utf-8")
                 gif_dec = decode_any(
                     make_gif(
@@ -385,9 +389,15 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 rows.append({
                     "doc_id": did,
-                    "n_bytes": len(tb),
-                    "content_sha256": hashlib.sha256(tb).hexdigest(),
-                    "size_class": "large" if len(tb) >= 1024 else "small",
+                    "n_bytes": None if null_text else len(tb),
+                    "content_sha256": (
+                        None if null_text
+                        else hashlib.sha256(tb).hexdigest()
+                    ),
+                    "size_class": (
+                        "large" if not null_text and len(tb) >= 1024
+                        else "small"
+                    ),
                     "img_w": bw,
                     "img_h": bh,
                     "img_bpp": bc * 8,

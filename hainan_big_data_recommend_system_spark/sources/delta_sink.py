@@ -23,6 +23,12 @@ them, Spark-first and transactional:
    checkpoint parquet + ``_last_checkpoint`` (operators/deltalog.py),
    so readers replay O(tail) instead of O(log).
 
+The format-neutral half — staging, condition analysis and pruning,
+the positioned scan, the put-if-absent claim and the commit-retry loop
+— lives in sources/lake_core.py, shared with the Iceberg sink; this
+module is the Delta adapter over it: deletion vectors, the
+``_delta_log`` commit bodies, and log replay.
+
 ``mode="append"`` adds files; ``mode="overwrite"`` additionally emits
 removes for every file live in the snapshot the writer read — the
 read-modify-claim window is exactly what the put-if-absent rename
@@ -50,7 +56,6 @@ import functools
 import json
 import os
 import re
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame
@@ -63,37 +68,25 @@ from ..operators.deltalog import (
     read_checkpoint_parquet,
     replay_delta_log,
 )
-
-
-#: Hive/Spark's directory name for a NULL partition value.  Delta's
-#: add.partitionValues records null as JSON null, not this literal.
-_HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
-
-_HEX_DIGITS = set("0123456789abcdefABCDEF")
-
-
-def unescape_path_name(s: str) -> str:
-    """Exact inverse of Spark's ``ExternalCatalogUtils.escapePathName``:
-    decode ``%XX`` (two hex digits) to the single character it encodes;
-    everything else is literal.  Generic URL unquoting is NOT the
-    inverse — it decodes multi-byte UTF-8 %-sequences escapePathName
-    never emits and silently drops malformed ones (ADVICE r10)."""
-    out: list[str] = []
-    i, n = 0, len(s)
-    while i < n:
-        c = s[i]
-        if (
-            c == "%"
-            and i + 3 <= n
-            and s[i + 1] in _HEX_DIGITS
-            and s[i + 2] in _HEX_DIGITS
-        ):
-            out.append(chr(int(s[i + 1 : i + 3], 16)))
-            i += 3
-        else:
-            out.append(c)
-            i += 1
-    return "".join(out)
+from .lake_core import (
+    _CM_PHYS_KEY,
+    _abs_uri,
+    _attach_partition_columns,
+    _declared_from_snap,
+    _matching_partition_files,
+    _prune_dml_paths,
+    _scan_with_positions,
+    _stats_prunable,
+    _with_zorder_value,
+    claim_if_absent,
+    commit_with_retries,
+    footer_int64_bounds,
+    footer_null_counts,
+    footer_string_bounds,
+    parse_partition_transforms,
+    parse_replace_where,
+    stage_parquet_parts,
+)
 
 
 def _spark_partition_str(v) -> str:
@@ -103,23 +96,6 @@ def _spark_partition_str(v) -> str:
     if isinstance(v, bool):
         return "true" if v else "false"
     return str(v)
-
-
-def _parse_hive_partition_dirs(comps: list[str]) -> dict[str, str | None]:
-    """``col=value`` directory components → partition values, with
-    Spark's escaping undone and the null sentinel mapped to JSON null
-    (what Delta stores on the add action)."""
-    pvals: dict[str, str | None] = {}
-    for comp in comps:
-        if "=" not in comp:
-            raise ValueError(
-                f"staged file under non-partition dir {comp!r}"
-            )
-        k, _, v = comp.partition("=")
-        pvals[unescape_path_name(k)] = (
-            None if v == _HIVE_DEFAULT_PARTITION else unescape_path_name(v)
-        )
-    return pvals
 
 
 def _log_dir(table_dir: str) -> str:
@@ -363,6 +339,19 @@ def _generated_transforms(snap: dict) -> list[dict]:
     return out
 
 
+def insert_columns(table_dir: str) -> list[tuple[str, str]]:
+    """The declared ``(name, schema-JSON type)`` columns a positional
+    SQL INSERT fills, in order — generated partition columns excluded
+    (the writer derives them)."""
+    snap = snapshot(table_dir)
+    if not snap.get("schema_json"):
+        return []
+    gen = {f["name"] for f in _generated_transforms(snap)}
+    return [(f["name"], f["type"])
+            for f in json.loads(snap["schema_json"])["fields"]
+            if isinstance(f.get("type"), str) and f["name"] not in gen]
+
+
 def _generation_expression_text(field: dict, df: DataFrame) -> str:
     """The canonical expression string recorded in the schema metadata
     for a partition transform — exactly what `_generated_transforms`
@@ -439,7 +428,6 @@ def _patched_schema_string(df: DataFrame,
 _CM_MODE_PROP = "delta.columnMapping.mode"
 _CM_MAXID_PROP = "delta.columnMapping.maxColumnId"
 _CM_ID_KEY = "delta.columnMapping.id"
-_CM_PHYS_KEY = "delta.columnMapping.physicalName"
 
 
 def _column_mapping(schema_json: str | None,
@@ -608,93 +596,6 @@ def read_delta_table(spark, table_dir: str,
     return df
 
 
-def footer_int64_bounds(footer_meta: dict) -> tuple[dict, dict]:
-    """Per-column file-level (min, max) for every INT64 column whose
-    chunk statistics cover ALL row groups — a partial min is not a
-    file min, so partially-covered columns are omitted rather than
-    guessed.  Shared by both lake sinks (Delta ``add.stats``, Iceberg
-    manifest ``lower_bounds``/``upper_bounds``)."""
-    n_rgs = footer_meta["n_row_groups"]
-    per_col: dict[str, list[tuple[int, int]]] = {}
-    for st in footer_meta["int64_stats"]:
-        per_col.setdefault(st["col"], []).append((st["min"], st["max"]))
-    mins = {c: min(m for m, _ in v) for c, v in per_col.items()
-            if len(v) == n_rgs}
-    maxs = {c: max(m for _, m in v) for c, v in per_col.items()
-            if len(v) == n_rgs}
-    return mins, maxs
-
-
-#: string bounds longer than this truncate (Delta's own stats default
-#: is 32 chars) — a free-text column must not embed whole documents
-#: into every add action / manifest entry.
-_STRING_BOUND_CHARS = 32
-
-
-def _truncate_upper(s: str, limit: int) -> str | None:
-    """A valid UPPER bound at most ``limit+``: the prefix with its
-    last character incremented (so it still sorts >= every string it
-    covers — Iceberg's truncate-up rule).  None when untruncatable
-    (all prefix chars at the max code point)."""
-    if len(s) <= limit:
-        return s
-    chars = list(s[:limit])
-    for j in range(len(chars) - 1, -1, -1):
-        cp = ord(chars[j])
-        if cp < 0x10FFFF:
-            ncp = cp + 1
-            if 0xD800 <= ncp <= 0xDFFF:
-                ncp = 0xE000  # never step into the surrogate gap
-            chars[j] = chr(ncp)
-            return "".join(chars[: j + 1])
-    return None
-
-
-def footer_string_bounds(footer_meta: dict) -> tuple[dict, dict]:
-    """Per-column file-level (min, max) for every BYTE_ARRAY column
-    whose MODERN min_value/max_value stats cover all row groups and
-    decode as strict UTF-8 — string keys (dates, ids, languages) are
-    the other half of the 100 TB skipping story (round 11).  Long
-    values TRUNCATE the way real writers do: the min to a prefix
-    (still a valid lower bound), the max to a prefix with its last
-    character incremented (still a valid upper bound) — pruning stays
-    conservative while the metadata stays O(32 chars), not O(largest
-    document)."""
-    n_rgs = footer_meta["n_row_groups"]
-    per_col: dict[str, list[tuple[str, str]]] = {}
-    for st in footer_meta.get("binary_stats", ()):
-        try:
-            mn = st["min"].decode("utf-8", "strict")
-            mx = st["max"].decode("utf-8", "strict")
-        except UnicodeDecodeError:
-            continue  # non-text binary: no proof, no stats
-        per_col.setdefault(st["col"], []).append((mn, mx))
-    mins = {}
-    maxs = {}
-    for c, v in per_col.items():
-        if len(v) != n_rgs:
-            continue
-        hi = _truncate_upper(max(m for _, m in v), _STRING_BOUND_CHARS)
-        if hi is None:
-            continue  # untruncatable upper: no stats, not wrong stats
-        mins[c] = min(m for m, _ in v)[:_STRING_BOUND_CHARS]
-        maxs[c] = hi
-    return mins, maxs
-
-
-def footer_null_counts(footer_meta: dict) -> dict[str, int]:
-    """Per-column file-level null counts for every column whose chunk
-    statistics cover ALL row groups (partial coverage is not a file
-    count, so partially-covered columns are omitted) — the spec's
-    ``add.stats.nullCount`` input and the IS [NOT] NULL pruning
-    lever's proof (round 13)."""
-    n_rgs = footer_meta["n_row_groups"]
-    per_col: dict[str, list[int]] = {}
-    for st in footer_meta.get("null_stats", ()):
-        per_col.setdefault(st["col"], []).append(st["nulls"])
-    return {c: sum(v) for c, v in per_col.items() if len(v) == n_rgs}
-
-
 def _file_stats(footer_meta: dict) -> str:
     """``add.stats`` JSON (PROTOCOL.md "Per-file Statistics") from the
     hand-parsed footer: numRecords always; minValues/maxValues from
@@ -715,99 +616,6 @@ def _file_stats(footer_meta: dict) -> str:
     if nulls:
         stats["nullCount"] = dict(sorted(nulls.items()))
     return json.dumps(stats, sort_keys=True, separators=(",", ":"))
-
-
-def stage_parquet_parts(
-    df: DataFrame,
-    table_dir: str,
-    token: str,
-    partition_by: list[str] | None = None,
-    bloom_filter_cols: list[str] | None = None,
-    dest_prefix: str = "",
-) -> list[dict]:
-    """The shared staging pipeline BOTH lake sinks build on: write
-    ``df`` as parquet into a staging dir, move each non-empty part
-    under ``dest_prefix`` (Hive-style ``col=value/`` subdirs when
-    partitioned), and return per-file facts — relative path, size,
-    row count, the partition values parsed back from the directory
-    layout, and the footer meta (the bounds/stats inputs).  Zero-row
-    parts (empty micro-batches) are dropped."""
-    from ..operators.parquetfmt import parse_footer_tail, read_footer_tail
-
-    stage = os.path.join(table_dir, f".stage-{uuid.uuid4().hex}")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    for c in bloom_filter_cols or ():
-        # parquet-mr's per-column split-block bloom filters — the
-        # point-lookup skipping lever operators/bloom.py decodes
-        writer = writer.option(f"parquet.bloom.filter.enabled#{c}",
-                               "true")
-    writer.parquet(stage)
-    parts: list[str] = []  # stage-relative paths
-    for root, _dirs, fnames in os.walk(stage):
-        rel_root = os.path.relpath(root, stage)
-        for f in fnames:
-            if f.startswith("part-") and f.endswith(".parquet"):
-                parts.append(
-                    f if rel_root == "." else os.path.join(rel_root, f)
-                )
-    parts.sort()
-    out: list[dict] = []
-    for i, relf in enumerate(parts):
-        comps = relf.split(os.sep)[:-1]
-        pvals = _parse_hive_partition_dirs(comps)
-        if set(pvals) != set(partition_by or []):
-            raise ValueError(
-                f"staged partition dirs {sorted(pvals)} disagree with "
-                f"partition_by {sorted(partition_by or [])}"
-            )
-        name = os.path.join(
-            *([dest_prefix] if dest_prefix else []), *comps,
-            f"part-{token}-{i:05d}.parquet",
-        )
-        src = os.path.join(stage, relf)
-        with open(src, "rb") as fh:
-            fh.seek(0, 2)
-            flen = fh.tell()
-
-            def _fetch(off, ln, _fh=fh):
-                _fh.seek(off)
-                return _fh.read(ln)
-
-            meta = parse_footer_tail(read_footer_tail(_fetch, flen))
-        if not meta["n_rows"]:
-            continue  # an empty micro-batch's part adds nothing
-        dest = os.path.join(table_dir, name)
-        os.makedirs(os.path.dirname(dest), exist_ok=True)
-        os.replace(src, dest)
-        out.append({"path": name.replace(os.sep, "/"), "size": flen,
-                    "n_rows": meta["n_rows"], "partition_values": pvals,
-                    "footer": meta})
-    shutil.rmtree(stage, ignore_errors=True)
-    return out
-
-
-def stage_single_parquet(
-    df: DataFrame, table_dir: str, dest_rel: str,
-    sort_cols: list[str] | None = None,
-) -> tuple[int, int]:
-    """Stage ``df`` as EXACTLY ONE parquet file at ``dest_rel``
-    (optionally sorted) and return ``(size, n_rows)`` from the footer
-    — the shape delete-file writers need."""
-    out = df.coalesce(1)
-    if sort_cols:
-        out = out.sortWithinPartitions(*sort_cols)
-    parts = stage_parquet_parts(
-        out, table_dir, uuid.uuid4().hex[:12]
-    )
-    if not parts:
-        return (0, 0)
-    (p,) = parts
-    dest = os.path.join(table_dir, dest_rel)
-    os.makedirs(os.path.dirname(dest), exist_ok=True)
-    os.replace(os.path.join(table_dir, p["path"]), dest)
-    return (p["size"], p["n_rows"])
 
 
 def _to_physical(df: DataFrame, l2p: dict[str, str] | None):
@@ -856,299 +664,6 @@ def _stage_data_files(
     ]
 
 
-#: RFC-3986 path characters Hadoop's Path URI keeps raw (probed
-#: against Spark's ``_metadata.file_path``): unreserved punctuation,
-#: sub-delims, ``:`` and ``@``; everything else ASCII percent-encodes
-#: (space → %20, % → %25, # → %23) while non-ASCII stays raw.
-_URI_SAFE = set("/-._~!$&'()*+,;=:@")
-
-
-def _abs_uri(table_dir: str, rel: str) -> str:
-    """The ``_metadata.file_path`` form of a table-relative path —
-    the Hadoop Path URI, NOT the raw OS path: a partition dir like
-    ``cat=50%25off`` (Spark-escaped ``50%off``) surfaces in
-    ``_metadata.file_path`` as ``cat=50%2525off``, so the join keys
-    must quote the same way or every special-char partition silently
-    misses."""
-    p = os.path.abspath(os.path.join(table_dir, rel))
-    out: list[str] = []
-    for ch in p:
-        if ch in _URI_SAFE or ord(ch) >= 0x80 or ch.isalnum():
-            out.append(ch)
-        else:
-            out.append(
-                "".join(f"%{b:02X}" for b in ch.encode("utf-8"))
-            )
-    return "file:" + "".join(out)
-
-
-def _attach_partition_columns(
-    spark,
-    df: DataFrame,
-    table_dir: str,
-    paths: list[str],
-    pv: dict[str, dict],
-    schema_json: str | None = None,
-):
-    """Re-attach partition columns (they live on ``add.partitionValues``,
-    NOT in the data files) by a BROADCAST JOIN against a tiny
-    ``(file_path, value, ...)`` mapping DataFrame — O(1) plan size
-    where a per-path ``create_map`` literal is an O(n_files)
-    expression tree the analyzer must plan (VERDICT r10 What's wrong
-    #2).  ``df`` must carry ``__fp`` (the scan's
-    ``_metadata.file_path``).  Values are cast to the table schema's
-    declared types when the snapshot carries one (Delta stores
-    partitionValues as strings).  Returns ``(df, part_cols)``."""
-    from pyspark.sql import functions as F
-
-    part_cols = sorted({c for p in paths for c in pv.get(p, {})})
-    if not part_cols:
-        return df, []
-    rows = [
-        tuple([_abs_uri(table_dir, p)]
-              + [pv.get(p, {}).get(c) for c in part_cols])
-        for p in paths
-    ]
-    schema = ", ".join(
-        ["__pv_fp string"] + [f"`{c}` string" for c in part_cols]
-    )
-    mapping = spark.createDataFrame(rows, schema)
-    if schema_json:
-        from pyspark.sql.types import StructType
-
-        declared = {
-            f.name: f.dataType
-            for f in StructType.fromJson(json.loads(schema_json)).fields
-        }
-        for c in part_cols:
-            if c in declared:
-                mapping = mapping.withColumn(
-                    c, F.col(c).cast(declared[c])
-                )
-    out = df.join(
-        F.broadcast(mapping),
-        df["__fp"] == mapping["__pv_fp"],
-        "left",
-    ).drop("__pv_fp")
-    return out, part_cols
-
-
-_IDENT = r"`?([A-Za-z_][A-Za-z0-9_]*)`?"
-_CMP_RE = re.compile(
-    rf"^\s*{_IDENT}\s*(==|=|<=|>=|<|>)\s*(.+?)\s*$"
-)
-_IN_RE = re.compile(
-    rf"^\s*{_IDENT}\s+IN\s*\((.*)\)\s*$", re.IGNORECASE
-)
-_BETWEEN_RE = re.compile(
-    rf"^\s*{_IDENT}\s+BETWEEN\s+(.+?)\s+AND\s+(.+?)\s*$",
-    re.IGNORECASE,
-)
-_ISNULL_RE = re.compile(
-    rf"^\s*{_IDENT}\s+IS\s+(NOT\s+)?NULL\s*$", re.IGNORECASE
-)
-
-
-def _parse_sql_literal(tok: str):
-    """``(ok, value)`` for a bare int/float/string SQL literal;
-    anything else (column refs, functions, NULL, concatenations like
-    ``'a' || 'b'``) is not a literal — an expression mistaken for a
-    literal would prune files that DO match."""
-    tok = tok.strip()
-    if len(tok) >= 2 and tok[0] == tok[-1] == "'":
-        inner = tok[1:-1]
-        if "'" in inner.replace("''", ""):
-            return False, None  # unescaped quote: not one literal
-        return True, inner.replace("''", "'")
-    if len(tok) >= 2 and tok[0] == tok[-1] == '"':
-        inner = tok[1:-1]
-        if '"' in inner:
-            return False, None
-        return True, inner
-    try:
-        return True, int(tok)
-    except ValueError:
-        pass
-    try:
-        return True, float(tok)
-    except ValueError:
-        return False, None
-
-
-def _split_in_list(body: str) -> list[str]:
-    """Split an IN-list body on TOP-LEVEL commas, quote- and
-    paren-aware (ADVICE r12 low): ``'a,b','c'`` is two literals, not
-    three tokens.  Same scanning rules as `_top_level_conjuncts`
-    (doubled ``''`` escapes inside single quotes)."""
-    out: list[str] = []
-    depth = 0
-    i = start = 0
-    n = len(body)
-    in_str: str | None = None
-    while i < n:
-        ch = body[i]
-        if in_str:
-            if ch == in_str:
-                if ch == "'" and i + 1 < n and body[i + 1] == "'":
-                    i += 2
-                    continue
-                in_str = None
-            i += 1
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append(body[start:i])
-            start = i + 1
-        i += 1
-    out.append(body[start:])
-    return out
-
-
-def _top_level_conjuncts(cond: str) -> list[str] | None:
-    """Split on top-level AND, quote- and paren-aware.  Returns None
-    when a top-level OR exists (OR binds looser than AND, so conjunct
-    analysis would be unsound)."""
-    out: list[str] = []
-    depth = 0
-    between_pending = 0
-    i = start = 0
-    n = len(cond)
-    in_str: str | None = None
-
-    def _is_word(j: int, w: str) -> bool:
-        if cond[j:j + len(w)].upper() != w:
-            return False
-        before_ok = j == 0 or not (cond[j - 1].isalnum()
-                                   or cond[j - 1] == "_")
-        k = j + len(w)
-        after_ok = k >= n or not (cond[k].isalnum() or cond[k] == "_")
-        return before_ok and after_ok
-
-    while i < n:
-        ch = cond[i]
-        if in_str:
-            if ch == in_str:
-                if ch == "'" and i + 1 < n and cond[i + 1] == "'":
-                    i += 2
-                    continue
-                in_str = None
-            i += 1
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and _is_word(i, "OR"):
-            return None  # top-level disjunction: no sound conjuncts
-        elif depth == 0 and _is_word(i, "BETWEEN"):
-            between_pending += 1
-            i += 7
-            continue
-        elif depth == 0 and _is_word(i, "AND"):
-            if between_pending:  # BETWEEN lo AND hi owns this AND
-                between_pending -= 1
-                i += 3
-                continue
-            out.append(cond[start:i])
-            start = i + 3
-            i += 3
-            continue
-        i += 1
-    out.append(cond[start:])
-    return out
-
-
-def analyze_condition(cond: str) -> dict[str, dict]:
-    """CONSERVATIVE constraint extraction from a Spark SQL predicate:
-    ``{col: {"eq": set | None, "lo": v | None, "hi": v | None}}`` from
-    the top-level AND conjuncts of the forms ``col <op> literal`` and
-    ``col IN (literals)``.  Any conjunct it cannot read contributes no
-    constraint (a conjunction only NARROWS the match set, so pruning
-    on the readable subset is always sound); a top-level OR yields no
-    constraints at all.  This is what lets the DML verbs compose the
-    repo's pruning levers (VERDICT r11 What's wrong #3) without a SQL
-    parser dependency."""
-    conjuncts = _top_level_conjuncts(cond)
-    if conjuncts is None:
-        return {}
-    out: dict[str, dict] = {}
-
-    def slot(col: str) -> dict:
-        return out.setdefault(
-            col, {"eq": None, "lo": None, "hi": None, "null": None}
-        )
-
-    for c in conjuncts:
-        m = _ISNULL_RE.match(c)
-        if m:
-            # col IS [NOT] NULL — the nullCount pruning lever's input
-            slot(m.group(1))["null"] = m.group(2) is None
-            continue
-        m = _BETWEEN_RE.match(c)
-        if m:
-            col = m.group(1)
-            ok_lo, lo = _parse_sql_literal(m.group(2))
-            ok_hi, hi = _parse_sql_literal(m.group(3))
-            if ok_lo and ok_hi:
-                s_ = slot(col)
-                try:
-                    s_["lo"] = (lo if s_["lo"] is None
-                                else max(s_["lo"], lo))
-                    s_["hi"] = (hi if s_["hi"] is None
-                                else min(s_["hi"], hi))
-                except TypeError:
-                    pass  # mixed-type bounds: keep the prior ones
-            continue
-        m = _IN_RE.match(c)
-        if m:
-            col, body = m.group(1), m.group(2)
-            vals = []
-            ok_all = True
-            for tok in _split_in_list(body):
-                ok, v = _parse_sql_literal(tok)
-                if not ok:
-                    ok_all = False
-                    break
-                vals.append(v)
-            if ok_all and vals:
-                s = slot(col)
-                s["eq"] = (set(vals) if s["eq"] is None
-                           else s["eq"] & set(vals))
-            continue
-        m = _CMP_RE.match(c)
-        if not m:
-            continue
-        col, op, rhs = m.group(1), m.group(2), m.group(3)
-        ok, v = _parse_sql_literal(rhs)
-        if not ok:
-            continue
-        s = slot(col)
-        if op in ("=", "=="):
-            s["eq"] = ({v} if s["eq"] is None else s["eq"] & {v})
-        elif op in ("<", "<="):
-            s["hi"] = v if s["hi"] is None else min(s["hi"], v)
-        elif op in (">", ">="):
-            s["lo"] = v if s["lo"] is None else max(s["lo"], v)
-    return out
-
-
-#: Declared Spark types whose recorded footer stats / bloom hashes ARE
-#: the logical values: int-family (INT32/INT64 physical == logical
-#: value) and string (UTF-8 BYTE_ARRAY).  decimal(p<=18, s>0) columns
-#: store UNSCALED ints (5.50 -> 550) and timestamps store epoch
-#: micros, so comparing SQL literals against those raw encodings would
-#: prune files that DO contain matches (ADVICE r12 high) — such
-#: columns never stats- or bloom-prune.
-_STATS_SAFE_INT = frozenset({"byte", "short", "integer", "long"})
-
-
 def _schema_accepts(table_json: str, incoming_json: str) -> bool:
     """May rows of ``incoming_json``'s schema append under
     ``table_json``'s contract without evolving it?  Same fields, same
@@ -1185,228 +700,6 @@ def _stamped_commit(acts: list[dict]) -> str:
         if isinstance(ci, dict):
             ci.setdefault("timestamp", ms)
     return make_commit(acts)
-
-
-def _declared_from_snap(snap: dict) -> dict[str, str]:
-    """``{column: schema-JSON type string}`` from the snapshot's
-    declared Delta schema — the typed-coercion gate every pruning
-    lever shares (complex struct types are skipped: never prunable)."""
-    declared: dict[str, str] = {}
-    if snap.get("schema_json"):
-        for f in json.loads(snap["schema_json"]).get("fields", []):
-            if isinstance(f.get("type"), str):
-                declared[f["name"]] = f["type"]
-    return declared
-
-
-def _stats_prunable(declared_type, value) -> bool:
-    """May ``value`` be range-compared against the raw footer-derived
-    min/max recorded for a column of ``declared_type``?  Mirrors the
-    `_partition_spellings` gate: int-family columns accept numeric
-    literals (the stats are the logical ints), string columns accept
-    string literals; every other declared type (decimal, timestamp,
-    date, float, unknown) is NOT prunable — no proof, must scan."""
-    if isinstance(value, bool):
-        return False
-    if declared_type in _STATS_SAFE_INT:
-        return isinstance(value, (int, float)) or (
-            type(value).__name__ == "Decimal"
-        )
-    if declared_type == "string":
-        return isinstance(value, str)
-    return False
-
-
-def _prune_dml_paths(
-    table_dir: str, snap: dict, condition: str, use_bloom: bool = True,
-    declared: dict[str, str] | None = None,
-    transforms: list[dict] | None = None,
-) -> tuple[list[str], dict]:
-    """Compose the repo's three pruning levers into DML scan planning
-    (VERDICT r11 What's wrong #3): partition pruning for equality/IN
-    constraints on partition columns, min/max data skipping for range
-    constraints, and bloom point-lookup skipping for single-value
-    equalities.  Files proven match-free are neither scanned nor
-    re-added — a ``DELETE WHERE dt = yesterday`` on a date-partitioned
-    100 TB table touches one partition's files.  All levers share the
-    no-proof-must-scan contract, so results are byte-identical to the
-    unpruned scan.  Returns ``(kept_paths, counts)``."""
-    from ..operators.bloom import prune_files_by_bloom
-    from ..operators.deltalog import prune_by_partition, prune_live_files
-
-    cons = analyze_condition(condition)
-    live = snap["live"]
-    counts = {"n_candidates": len(live), "n_partition_skipped": 0,
-              "n_stats_skipped": 0, "n_bloom_skipped": 0,
-              "n_null_skipped": 0}
-    if not cons:
-        return sorted(live), counts
-    part_cols = {
-        c for v in snap.get("partition_values", {}).values() for c in v
-    }
-    # partition values are the STRING spellings of the Hive dir names;
-    # a textual comparison is sound only when the declared column type
-    # and the literal type spell values identically — int-family and
-    # string columns do, float/date/timestamp may not (Spark's typed
-    # filter coerces; a spelling mismatch would wrongly skip), so
-    # those columns simply don't partition-prune here
-    if declared is None:
-        declared = _declared_from_snap(snap)
-    _INT_TYPES = {"byte", "short", "integer", "long"}
-
-    def _partition_spellings(col: str, vals: set) -> set[str] | None:
-        t = declared.get(col)
-        out: set[str] = set()
-        for v in vals:
-            if isinstance(v, bool):
-                return None
-            if t == "string" and isinstance(v, str):
-                out.add(v)
-            elif t in _INT_TYPES and isinstance(v, int):
-                out.add(str(v))
-            elif t in _INT_TYPES and isinstance(v, float) \
-                    and v.is_integer():
-                out.add(str(int(v)))
-            else:
-                return None  # unsure spelling: no proof, no pruning
-        return out
-
-    wanted = {}
-    for c, cc in cons.items():
-        if c in part_cols and cc["eq"]:
-            sp = _partition_spellings(c, cc["eq"])
-            if sp:
-                wanted[c] = sp
-    # HIDDEN-partitioning lever (round 13): a constraint on a
-    # transform's SOURCE column maps to the derived partition field's
-    # spellings — a ts-range DELETE on a days(ts) table opens only the
-    # matching day partitions
-    if transforms:
-        from .iceberg_sink import transform_constraint_spellings
-
-        by_source: dict[str, list[dict]] = {}
-        for f in transforms:
-            if f["transform"] != "identity" and f["name"] in part_cols:
-                by_source.setdefault(f["source"], []).append(f)
-        for c, cc in cons.items():
-            for f in by_source.get(c, ()):
-                sp = transform_constraint_spellings(
-                    f, cc, src_type=declared.get(c))
-                if sp is not None:
-                    wanted[f["name"]] = (
-                        wanted[f["name"]] & sp
-                        if f["name"] in wanted else sp
-                    )
-    if wanted:
-        r = prune_by_partition({**snap, "live": live}, wanted)
-        counts["n_partition_skipped"] = r["n_skipped"]
-        live = r["kept"]
-    for c, cc in cons.items():
-        try:
-            if cc["eq"]:
-                lo, hi = min(cc["eq"]), max(cc["eq"])
-            else:
-                lo, hi = cc["lo"], cc["hi"]
-        except TypeError:
-            continue  # mixed-type IN list: no sound bounds
-        if lo is None and hi is None:
-            continue
-        if not all(_stats_prunable(declared.get(c), v)
-                   for v in (lo, hi) if v is not None):
-            continue  # decimal/timestamp/... stats are raw encodings
-        r = prune_live_files({**snap, "live": live}, c, lo=lo, hi=hi)
-        counts["n_stats_skipped"] += r["n_skipped"]
-        live = r["kept"]
-    # nullCount lever (round 13): IS NULL skips files recording zero
-    # nulls for the column, IS NOT NULL skips all-null files — the
-    # spec's add.stats.nullCount made load-bearing.  Files without the
-    # stat are kept (no proof, must scan).
-    fstats = snap.get("file_stats", {})
-    for c, cc in cons.items():
-        if cc.get("null") is None:
-            continue
-        kept_n: dict[str, tuple[int, int]] = {}
-        for path, meta in live.items():
-            st = fstats.get(path) or {}
-            nc = (st.get("nullCount") or {}).get(c)
-            nr = st.get("numRecords")
-            if nc is None:
-                kept_n[path] = meta
-            elif cc["null"] and nc == 0:
-                counts["n_null_skipped"] += 1
-            elif not cc["null"] and nr is not None and nc == nr:
-                counts["n_null_skipped"] += 1
-            else:
-                kept_n[path] = meta
-        live = kept_n
-    if use_bloom:
-        for c, cc in cons.items():
-            if cc["eq"] and len(cc["eq"]) == 1:
-                (v,) = cc["eq"]
-                if isinstance(v, bool) or not isinstance(v, (int, str)):
-                    continue  # float/bool probes can't use the filter
-                t = declared.get(c)
-                # the written bloom hashes the PHYSICAL encoding: an
-                # int probe is sound only against an int-family column,
-                # a string probe only against a string column — a
-                # decimal column hashes unscaled ints, so a logical
-                # probe would wrongly prove absence (ADVICE r12 high)
-                if not ((t in _STATS_SAFE_INT and isinstance(v, int))
-                        or (t == "string" and isinstance(v, str))):
-                    continue
-                r = prune_files_by_bloom(table_dir, live, c, v)
-                counts["n_bloom_skipped"] += r["n_skipped"]
-                live = r["kept"]
-    return sorted(live), counts
-
-
-def _scan_with_positions(spark, table_dir: str, paths: list[str],
-                         schema_json: str | None = None,
-                         part_cols=()) -> DataFrame:
-    """The table's physical rows with ``__fp``/``__ri`` file-position
-    columns (parquet ``_metadata``) materialized up front, so joins
-    downstream can't lose the hidden metadata column.
-
-    ``schema_json`` (round 12): read with the TABLE's declared schema
-    (minus its partition columns, which live in the layout, not the
-    files) — on a schema-EVOLVED table the files' schemas differ and a
-    bare multi-file read takes one file's schema, dropping (or failing
-    on) columns the other generation carries; the declared schema is
-    the read contract and fills missing columns with nulls."""
-    from pyspark.sql import functions as F
-
-    reader = spark.read
-    p2l: dict[str, str] = {}
-    if schema_json:
-        from pyspark.sql.types import StructType
-
-        cm = _column_mapping(schema_json, {_CM_MODE_PROP: "name"})
-        l2p = cm["l2p"] if cm else {}
-        declared = StructType.fromJson(json.loads(schema_json))
-        data_fields = []
-        for f in declared.fields:
-            if f.name in set(part_cols):
-                continue
-            phys = l2p.get(f.name, f.name)
-            if phys != f.name:
-                p2l[phys] = f.name
-                f = type(f)(phys, f.dataType, f.nullable)
-            data_fields.append(f)
-        reader = reader.schema(StructType(data_fields))
-    out = reader.parquet(
-        *[os.path.join(table_dir, p) for p in paths]
-    ).select(
-        F.col("_metadata.file_path").alias("__fp"),
-        F.col("_metadata.row_index").alias("__ri"),
-        "*",
-    )
-    if p2l:
-        # column mapping: the files store PHYSICAL names; rename back
-        # to the logical contract right at the scan boundary
-        out = out.select(*[
-            F.col(f"`{c}`").alias(p2l.get(c, c)) for c in out.columns
-        ])
-    return out
 
 
 def _dead_positions_df(spark, table_dir: str, dv_abs: dict[str, dict]):
@@ -1565,6 +858,26 @@ def _dv_descriptors(
     return descs
 
 
+def _dv_readd_actions(cur: dict, descs: dict[str, dict], pv: dict,
+                      fstats: dict) -> list[dict]:
+    """remove + re-add-with-deletion-vector for every touched file:
+    the data file stays byte-identical (size, rows, partition values,
+    stats restated), only its new DV descriptor tombstones rows."""
+    acts: list[dict] = []
+    for rel in sorted(descs):
+        size, rows = cur["live"][rel]
+        acts.append({"remove": {"path": rel, "dataChange": True}})
+        add = {"path": rel, "size": size, "numRecords": rows,
+               "partitionValues": pv.get(rel, {}),
+               "deletionVector": descs[rel], "dataChange": True}
+        if rel in fstats:
+            add["stats"] = json.dumps(
+                fstats[rel], sort_keys=True, separators=(",", ":")
+            )
+        acts.append({"add": add})
+    return acts
+
+
 def _conflicting_paths(snap: dict, cur: dict, rels) -> list[str]:
     """The retry loop's logical-conflict rule (ADVICE r10 medium): a
     concurrent DV delete commits as remove+re-add of the SAME path, so
@@ -1592,58 +905,39 @@ def _stage_cdc_files(
     CDF rows describe the change, they are not table data).
     Zero-row part files are dropped.  Under column mapping the change
     files store PHYSICAL names (``_change_type`` passes through)."""
-    from ..operators.parquetfmt import parse_footer_tail, read_footer_tail
-
-    df = _to_physical(df, l2p)
-    stage = os.path.join(table_dir, f".stage-cdc-{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(stage)
-    parts = sorted(
-        f for f in os.listdir(stage)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    cdc_dir = os.path.join(table_dir, "_change_data")
     actions: list[dict] = []
-    i = 0
-    for f in parts:
-        src = os.path.join(stage, f)
-        with open(src, "rb") as fh:
-            fh.seek(0, 2)
-            flen = fh.tell()
-
-            def _fetch(off, ln, _fh=fh):
-                _fh.seek(off)
-                return _fh.read(ln)
-
-            meta = parse_footer_tail(read_footer_tail(_fetch, flen))
-        if not meta["n_rows"]:
-            continue
+    for i, p in enumerate(stage_parquet_parts(
+        _to_physical(df, l2p), table_dir, token, dest_prefix="_change_data",
+    )):
         rel = f"_change_data/cdc-{token}-{tag}-{i:05d}.parquet"
-        i += 1
-        os.makedirs(cdc_dir, exist_ok=True)
-        os.replace(src, os.path.join(table_dir, rel))
+        os.replace(os.path.join(table_dir, p["path"]),
+                   os.path.join(table_dir, rel))
         actions.append({"cdc": {
-            "path": rel, "partitionValues": {}, "size": flen,
+            "path": rel, "partitionValues": {}, "size": p["size"],
             "dataChange": False,
         }})
-    shutil.rmtree(stage, ignore_errors=True)
     return actions
+
+
+def _metadata_action(table_dir: str, schema_string: str,
+                     part_cols: list[str], configuration: dict) -> dict:
+    """A metaData action (PROTOCOL.md "Change Metadata"); the table id
+    derives from the table dir, so every commit restates the same one."""
+    return {"metaData": {
+        "id": str(uuid.uuid5(uuid.NAMESPACE_URL, table_dir)),
+        "format": {"provider": "parquet", "options": {}},
+        "schemaString": schema_string,
+        "partitionColumns": part_cols,
+        "configuration": configuration,
+    }}
 
 
 def _claim_version(table_dir: str, version: int, body: str,
                    token: str) -> bool:
-    """Put-if-absent commit claim: link(2) fails atomically if another
-    writer claimed this version first (the local-FS analogue of the
-    object-store conditional put PROTOCOL.md requires)."""
-    tmp = _commit_path(table_dir, version) + f".tmp-{token}"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(body)
-    try:
-        os.link(tmp, _commit_path(table_dir, version))
-    except FileExistsError:
-        os.unlink(tmp)
-        return False
-    os.unlink(tmp)
-    return True
+    """Put-if-absent commit claim of ``_delta_log/{version}.json``
+    (`claim_if_absent` — the local-FS analogue of the object-store
+    conditional put PROTOCOL.md requires)."""
+    return claim_if_absent(_commit_path(table_dir, version), body, token)
 
 
 def _maybe_checkpoint(table_dir: str, version: int,
@@ -1766,236 +1060,10 @@ def _upgrade_actions(
                         c for v in cur.get(
                             "partition_values", {}).values() for c in v
                     })
-                md = {
-                    "id": str(uuid.uuid5(uuid.NAMESPACE_URL, table_dir)),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": cur["schema_json"],
-                    "partitionColumns": part_cols,
-                    "configuration": cfg,
-                }
                 k = 1 if out and "protocol" in out[0] else 0
-                out.insert(k, {"metaData": md})
+                out.insert(k, _metadata_action(
+                    table_dir, cur["schema_json"], part_cols, cfg))
     return out
-
-
-_MIDNIGHT_RE = re.compile(
-    r"^(\d{4}-\d{2}-\d{2})([ T]00:00(:00(\.0+)?)?)?$"
-)
-
-
-def _transform_replace_spellings(
-    field: dict, lo, lo_incl: bool, hi, hi_incl: bool,
-) -> set[str]:
-    """The derived-partition spellings a half-open SOURCE-column range
-    covers EXACTLY (round 14, VERDICT r13 next-round #5 —
-    ``replace_where`` over hidden partitions): the daily-reload
-    predicate ``ts >= D AND ts < D+1`` on a ``days(ts)`` table names
-    the D partition and nothing else.  Anything not provably
-    whole-partition-aligned is REFUSED — replacing a partition a
-    sub-partition predicate only half-covers would drop rows the
-    caller did not ask to replace."""
-    import datetime
-
-    t = field["transform"]
-    if lo is None or hi is None:
-        raise ValueError(
-            f"replace_where over {t} partitioning needs a bounded "
-            f"``{field['source']} >= LO AND {field['source']} < HI`` "
-            "range"
-        )
-    if not lo_incl or hi_incl:
-        raise ValueError(
-            f"replace_where over {t} partitioning must be a half-open "
-            "range (>= lower bound, < upper bound) to align with "
-            "whole partitions"
-        )
-    if t == "day":
-        mlo = _MIDNIGHT_RE.match(lo) if isinstance(lo, str) else None
-        mhi = _MIDNIGHT_RE.match(hi) if isinstance(hi, str) else None
-        if not mlo or not mhi:
-            raise ValueError(
-                "replace_where day range bounds must be midnight-"
-                f"aligned date strings; got {lo!r} / {hi!r}"
-            )
-        d0 = datetime.date.fromisoformat(mlo.group(1))
-        d1 = datetime.date.fromisoformat(mhi.group(1))
-        n = (d1 - d0).days
-        if n <= 0 or n > 3660:
-            raise ValueError(
-                f"replace_where day range [{d0}, {d1}) is empty or "
-                "spans more than ~10 years"
-            )
-        return {
-            (d0 + datetime.timedelta(days=i)).isoformat()
-            for i in range(n)
-        }
-    if t.startswith("truncate["):
-        w = field["param"]
-        if not all(isinstance(v, int) and not isinstance(v, bool)
-                   for v in (lo, hi)):
-            raise ValueError(
-                "replace_where truncate range bounds must be integer "
-                f"literals; got {lo!r} / {hi!r}"
-            )
-        if lo % w or hi % w or hi <= lo or (hi - lo) // w > 4096:
-            raise ValueError(
-                f"replace_where truncate[{w}] range [{lo}, {hi}) is "
-                "not aligned to whole-width multiples (or is empty / "
-                "oversized)"
-            )
-        return {str(x) for x in range(lo, hi, w)}
-    raise ValueError(
-        f"replace_where cannot name {t} partitions exactly (a bucket "
-        "hash range never aligns with a value range); use the DML "
-        "verbs for row-level replacement"
-    )
-
-
-def parse_replace_where(
-    condition: str,
-    part_cols: set[str],
-    declared: dict[str, str],
-    transforms: list[dict] | None = None,
-) -> dict[str, set[str]]:
-    """Validate a ``replace_where`` predicate for PARTITION-scoped
-    overwrite (round 12): it must be a top-level conjunction of
-    ``col = literal`` / ``col IN (literals)`` over PARTITION columns
-    whose declared types spell values exactly (int-family / string) —
-    the shape real writers accept for dynamic partition replacement.
-    Anything looser is REFUSED: silently narrowing the predicate would
-    leave rows alive that the caller asked to replace.  Returns
-    ``{partition_col: {dir-name spellings}}``."""
-    conjuncts = _top_level_conjuncts(condition)
-    if conjuncts is None:
-        raise ValueError(
-            "replace_where must be a conjunction of partition-column "
-            "equalities (top-level OR is not supported)"
-        )
-    _INT_TYPES = {"byte", "short", "integer", "long"}
-
-    def spell(col: str, v) -> str:
-        t = declared.get(col)
-        if isinstance(v, bool):
-            raise ValueError(
-                "replace_where on boolean literals is unsupported"
-            )
-        if t == "string" and isinstance(v, str):
-            return v
-        if t in _INT_TYPES and isinstance(v, int):
-            return str(v)
-        raise ValueError(
-            f"replace_where literal {v!r} cannot be matched exactly "
-            f"against partition column {col!r} of type {t!r}"
-        )
-
-    by_source: dict[str, list[dict]] = {}
-    for f in transforms or []:
-        if f.get("transform") != "identity":
-            by_source.setdefault(f["source"], []).append(f)
-    ranges: dict[str, dict] = {}
-
-    out: dict[str, set[str]] = {}
-    for c in conjuncts:
-        # HIDDEN-partition lever (round 14): a range conjunct on a
-        # transform's SOURCE column — collected here, validated as
-        # exactly partition-aligned below
-        mc = _CMP_RE.match(c)
-        if mc and mc.group(1) in by_source:
-            col, op = mc.group(1), mc.group(2)
-            ok, v = _parse_sql_literal(mc.group(3))
-            if not ok:
-                raise ValueError(
-                    f"replace_where right-hand side {mc.group(3)!r} "
-                    "is not a literal"
-                )
-            r = ranges.setdefault(
-                col, {"lo": None, "lo_incl": True,
-                      "hi": None, "hi_incl": False})
-            if op in ("=", "=="):
-                raise ValueError(
-                    f"replace_where equality on {col!r} (a partition "
-                    "transform's source column) cannot name a whole "
-                    "partition; use a half-open range"
-                )
-            if op in (">", ">="):
-                if r["lo"] is not None:
-                    raise ValueError(
-                        f"replace_where names two lower bounds on "
-                        f"{col!r}"
-                    )
-                r["lo"], r["lo_incl"] = v, op == ">="
-            else:
-                if r["hi"] is not None:
-                    raise ValueError(
-                        f"replace_where names two upper bounds on "
-                        f"{col!r}"
-                    )
-                r["hi"], r["hi_incl"] = v, op == "<="
-            continue
-        m = _IN_RE.match(c)
-        if m:
-            col, body = m.group(1), m.group(2)
-            vals = []
-            for tok in _split_in_list(body):
-                ok, v = _parse_sql_literal(tok)
-                if not ok:
-                    raise ValueError(
-                        f"replace_where IN list holds a non-literal: "
-                        f"{tok.strip()!r}"
-                    )
-                vals.append(v)
-        else:
-            m = _CMP_RE.match(c)
-            if not m or m.group(2) not in ("=", "=="):
-                raise ValueError(
-                    f"replace_where conjunct {c.strip()!r} is not a "
-                    "partition-column equality or IN list"
-                )
-            col = m.group(1)
-            ok, v = _parse_sql_literal(m.group(3))
-            if not ok:
-                raise ValueError(
-                    f"replace_where right-hand side {m.group(3)!r} is "
-                    "not a literal"
-                )
-            vals = [v]
-        if col not in part_cols:
-            raise ValueError(
-                f"replace_where references {col!r}, which is not a "
-                f"partition column ({sorted(part_cols)})"
-            )
-        spellings = {spell(col, v) for v in vals}
-        out[col] = (out.get(col, spellings) & spellings
-                    if col in out else spellings)
-    for src, r in ranges.items():
-        for f in by_source[src]:
-            sp = _transform_replace_spellings(
-                f, r["lo"], r["lo_incl"], r["hi"], r["hi_incl"])
-            out[f["name"]] = (out[f["name"]] & sp
-                              if f["name"] in out else sp)
-    if not out:
-        raise ValueError("replace_where carries no constraints")
-    return out
-
-
-def _matching_partition_files(
-    live: dict, pv: dict[str, dict], wanted: dict[str, set[str]],
-) -> list[str]:
-    """Live files whose partition tuple satisfies EVERY constraint —
-    the replacement set.  A file missing a constrained column cannot
-    be proven in or out; replace_where refuses such layouts."""
-    out = []
-    for p in live:
-        vals = pv.get(p, {})
-        missing = [c for c in wanted if c not in vals]
-        if missing:
-            raise ValueError(
-                f"file {p!r} has no partition value for {missing}; "
-                "replace_where needs a uniformly partitioned table"
-            )
-        if all(vals[c] in allowed for c, allowed in wanted.items()):
-            out.append(p)
-    return sorted(out)
 
 
 def write_delta(
@@ -2003,7 +1071,6 @@ def write_delta(
     table_dir: str,
     mode: str = "append",
     checkpoint_interval: int = 10,
-    max_retries: int = 10,
     partition_by: list[str] | None = None,
     txn: tuple[str, int] | None = None,
     merge_schema: bool = False,
@@ -2012,7 +1079,8 @@ def write_delta(
 ) -> dict:
     """Commit ``df`` to the table.  Returns ``{version, n_files,
     n_records, n_removed}``.  Retries version claims on conflict
-    (another writer committed first) up to ``max_retries`` times —
+    (another writer committed first) up to
+    `lake_core.MAX_COMMIT_ATTEMPTS` times —
     the data files are written ONCE; only the log claim retries.
     ``partition_by`` writes Hive-layout partition dirs and stamps
     ``add.partitionValues`` + ``metaData.partitionColumns`` (Delta's
@@ -2058,8 +1126,6 @@ def write_delta(
     # columns (partitioning stays hidden from the writer).
     gen_specs: list[dict] = []
     if partition_by and any("(" in str(p) for p in partition_by):
-        from .iceberg_sink import parse_partition_transforms
-
         pspec = parse_partition_transforms(list(partition_by))
         gen_specs = [f for f in pspec if f["transform"] != "identity"]
         overlap = [f["name"] for f in gen_specs
@@ -2190,7 +1256,8 @@ def write_delta(
 
     # schema_string computed above (patched with generation
     # expressions when partition transforms are in play)
-    for _ in range(max_retries):
+
+    def attempt():
         snap = snapshot(table_dir)
         if _txn_done(snap):  # a duplicate writer beat us to the claim
             for a in adds:
@@ -2205,22 +1272,16 @@ def write_delta(
         if version == 0:
             acts.append({"protocol": {"minReaderVersion": 1,
                                       "minWriterVersion": 2}})
-        acts.append({"metaData": {
-            "id": str(uuid.uuid5(uuid.NAMESPACE_URL, table_dir)),
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": schema_string,
-            "partitionColumns": (
-                list(partition_by) if partition_by
-                else (snap.get("partition_columns") or [])
-            ),
-            # re-emitting metaData must not WIPE table properties a
-            # prior commit set (delta.enableChangeDataFeed — round 13);
-            # the mapping patch advances maxColumnId for new fields
-            "configuration": {
-                **(snap.get("metadata_configuration") or {}),
-                **(cm_cfg or {}),
-            },
-        }})
+        # re-emitting metaData must not WIPE table properties a prior
+        # commit set (delta.enableChangeDataFeed — round 13); the
+        # mapping patch advances maxColumnId for new fields
+        acts.append(_metadata_action(
+            table_dir, schema_string,
+            (list(partition_by) if partition_by
+             else (snap.get("partition_columns") or [])),
+            {**(snap.get("metadata_configuration") or {}),
+             **(cm_cfg or {})},
+        ))
         removed = []
         if mode == "overwrite":
             if wanted_replace is not None:
@@ -2245,14 +1306,12 @@ def write_delta(
         }})
         if not _claim_version(table_dir, version, _stamped_commit(acts),
                               token):
-            continue  # lost the race: re-read the log, retry
+            return None  # lost the race: re-read the log, retry
         _maybe_checkpoint(table_dir, version, checkpoint_interval)
         return {"version": version, "n_files": len(adds),
                 "n_records": sum(a["numRecords"] for a in adds),
                 "n_removed": len(removed)}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 def cleanup_delta_log(table_dir: str, retain_versions: int) -> dict:
@@ -2397,50 +1456,12 @@ def remove_orphan_files_delta(
             "n_referenced": len(referenced)}
 
 
-def _with_zorder_value(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Attach ``__zval``: the Morton interleave of the (broadcast
-    min/max-quantized) dimensions for 2 columns, or the column itself
-    for 1 — the clustering key OPTIMIZE ZORDER BY sorts the rewrite
-    on (operators/zorder.py holds the oracle-checked twin)."""
-    from pyspark.sql import functions as F
-
-    from ..operators.zorder import GRID_BITS, _interleave
-
-    if len(cols) == 1:
-        return df.withColumn("__zval", F.col(cols[0]).cast("long"))
-    if len(cols) != 2:
-        raise ValueError("zorder_by supports 1 or 2 columns")
-    a, b = cols
-    grid_max = (1 << GRID_BITS) - 1
-    stats = df.agg(
-        F.min(F.col(a).cast("long")).alias("__alo"),
-        F.max(F.col(a).cast("long")).alias("__ahi"),
-        F.min(F.col(b).cast("long")).alias("__blo"),
-        F.max(F.col(b).cast("long")).alias("__bhi"),
-    )
-    return (
-        df.crossJoin(F.broadcast(stats))
-        .withColumn("__qa", F.expr(
-            f"(({a} - __alo) * {grid_max}L)"
-            f" div greatest(__ahi - __alo, 1L)"
-        ))
-        .withColumn("__qb", F.expr(
-            f"(({b} - __blo) * {grid_max}L)"
-            f" div greatest(__bhi - __blo, 1L)"
-        ))
-        .withColumn("__zval",
-                    _interleave(F.col("__qa"), F.col("__qb"), GRID_BITS))
-        .drop("__alo", "__ahi", "__blo", "__bhi", "__qa", "__qb")
-    )
-
-
 def optimize_delta(
     spark,
     table_dir: str,
     small_file_bytes: int = 32 * 1024 * 1024,
     target_partitions: int = 1,
     checkpoint_interval: int = 10,
-    max_retries: int = 10,
     zorder_by: list[str] | None = None,
 ) -> dict:
     """OPTIMIZE: bin-pack live files smaller than ``small_file_bytes``
@@ -2551,7 +1572,8 @@ def optimize_delta(
     adds = _stage_data_files(df, table_dir, token,
                              partition_by=part_cols or None,
                              l2p=_l2p_of(snap))
-    for _ in range(max_retries):
+
+    def attempt():
         cur = snapshot(table_dir)
         conflicts = _conflicting_paths(snap, cur, small)
         if conflicts:
@@ -2576,9 +1598,7 @@ def optimize_delta(
                     "n_files": len(adds),
                     "n_records": sum(a["numRecords"] for a in adds),
                     "n_dv_rows_dropped": n_dv_rows}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 def delete_where_delta(
@@ -2587,7 +1607,6 @@ def delete_where_delta(
     condition: str,
     inline_threshold: int = 512,
     checkpoint_interval: int = 10,
-    max_retries: int = 10,
     change_data: bool = True,
 ) -> dict:
     """DELETE WHERE — without rewriting a single data file.
@@ -2680,7 +1699,7 @@ def delete_where_delta(
             table_dir, token, "del", l2p=_l2p_of(snap),
         )
 
-    for _ in range(max_retries):
+    def attempt():
         cur = snapshot(table_dir)
         conflicts = _conflicting_paths(snap, cur, sorted(descs))
         if conflicts:
@@ -2689,18 +1708,7 @@ def delete_where_delta(
                 f"({conflicts[:3]})"
             )
         version = cur["version"] + 1
-        acts: list[dict] = []
-        for rel in sorted(descs):
-            size, rows = cur["live"][rel]
-            acts.append({"remove": {"path": rel, "dataChange": True}})
-            add = {"path": rel, "size": size, "numRecords": rows,
-                   "partitionValues": pv.get(rel, {}),
-                   "deletionVector": descs[rel], "dataChange": True}
-            if rel in fstats:
-                add["stats"] = json.dumps(
-                    fstats[rel], sort_keys=True, separators=(",", ":")
-                )
-            acts.append({"add": add})
+        acts = _dv_readd_actions(cur, descs, pv, fstats)
         acts.extend(cdc_acts)
         acts.append({"commitInfo": {"operation": "DELETE",
                                     "predicate": condition}})
@@ -2710,9 +1718,7 @@ def delete_where_delta(
             return {"version": version,
                     "n_files_touched": len(descs),
                     "n_rows_deleted": n_deleted}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 def merge_delta(
@@ -2722,7 +1728,6 @@ def merge_delta(
     key_cols: list[str],
     inline_threshold: int = 512,
     checkpoint_interval: int = 10,
-    max_retries: int = 10,
     partition_by: list[str] | None = None,
     change_data: bool = True,
     matched_delete: str | None = None,
@@ -3305,7 +2310,8 @@ def merge_delta(
     # metadata — re-emitting the source's bare schema would strip the
     # mapping and stale-name every data file (round 15)
     schema_string, cm_cfg = _carry_mapping_schema(schema_string, snap)
-    for _ in range(max_retries):
+
+    def attempt():
         cur = snapshot(table_dir)
         conflicts = _conflicting_paths(snap, cur, sorted(descs))
         if conflicts:
@@ -3331,27 +2337,12 @@ def merge_delta(
         if version == 0:
             acts.append({"protocol": {"minReaderVersion": 1,
                                       "minWriterVersion": 2}})
-        acts.append({"metaData": {
-            "id": str(uuid.uuid5(uuid.NAMESPACE_URL, table_dir)),
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": schema_string,
-            "partitionColumns": part_cols,
-            "configuration": {
-                **(cur.get("metadata_configuration") or {}),
-                **(cm_cfg or {}),
-            },
-        }})
-        for rel in sorted(descs):
-            size, rows = cur["live"][rel]
-            acts.append({"remove": {"path": rel, "dataChange": True}})
-            add = {"path": rel, "size": size, "numRecords": rows,
-                   "partitionValues": pv.get(rel, {}),
-                   "deletionVector": descs[rel], "dataChange": True}
-            if rel in fstats:
-                add["stats"] = json.dumps(
-                    fstats[rel], sort_keys=True, separators=(",", ":")
-                )
-            acts.append({"add": add})
+        acts.append(_metadata_action(
+            table_dir, schema_string, part_cols,
+            {**(cur.get("metadata_configuration") or {}),
+             **(cm_cfg or {})},
+        ))
+        acts.extend(_dv_readd_actions(cur, descs, pv, fstats))
         acts.extend({"add": {**a, "dataChange": True}} for a in adds)
         acts.extend(cdc_acts)
         acts.append({"commitInfo": {"operation": "MERGE",
@@ -3366,9 +2357,7 @@ def merge_delta(
                     "n_files_added": len(adds),
                     "n_records_added": sum(
                         a["numRecords"] for a in adds)}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 def read_changes(
@@ -3571,7 +2560,6 @@ def restore_delta(
     table_dir: str,
     version: int,
     checkpoint_interval: int = 10,
-    max_retries: int = 10,
 ) -> dict:
     """RESTORE TABLE TO VERSION AS OF ``version`` — a NEW commit that
     makes the current snapshot equal the historical one while keeping
@@ -3591,7 +2579,8 @@ def restore_delta(
         )
     target = snapshot_as_of(table_dir, version)
     token = uuid.uuid4().hex[:12]
-    for _ in range(max_retries):
+
+    def attempt():
         cur = snapshot(table_dir)
         t_dvs = target.get("deletion_vectors", {})
         t_pv = target.get("partition_values", {})
@@ -3607,16 +2596,12 @@ def restore_delta(
         if not readds and not removes:
             return {"version": None, "restored_to": version,
                     "n_readds": 0, "n_removes": 0}
-        acts: list[dict] = [{"metaData": {
-            "id": str(uuid.uuid5(uuid.NAMESPACE_URL, table_dir)),
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": target["schema_json"],
-            "partitionColumns": (
-                target.get("partition_columns")
-                or sorted({c for v in t_pv.values() for c in v})
-            ),
-            "configuration": target.get("metadata_configuration") or {},
-        }}]
+        acts: list[dict] = [_metadata_action(
+            table_dir, target["schema_json"],
+            (target.get("partition_columns")
+             or sorted({c for v in t_pv.values() for c in v})),
+            target.get("metadata_configuration") or {},
+        )]
         acts.extend(
             {"remove": {"path": p, "dataChange": True}} for p in removes
         )
@@ -3647,9 +2632,7 @@ def restore_delta(
                               checkpoint_interval)
             return {"version": new_version, "restored_to": version,
                     "n_readds": len(readds), "n_removes": len(removes)}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 #: SQL type spelling -> Delta schema-JSON type name (scalars only —
@@ -3668,8 +2651,7 @@ _SQL_TO_JSON_TYPE = {
 }
 
 
-def add_columns_delta(table_dir: str, columns: dict[str, str],
-                      max_retries: int = 10) -> dict:
+def add_columns_delta(table_dir: str, columns: dict[str, str]) -> dict:
     """ALTER TABLE ADD COLUMNS (round 14): a metaData-only commit
     appending nullable columns to the declared schema — old files
     simply surface NULLs for them (the declared schema is the read
@@ -3690,7 +2672,8 @@ def add_columns_delta(table_dir: str, columns: dict[str, str],
             )
         typed[name] = jt
     token = uuid.uuid4().hex[:12]
-    for _ in range(max_retries):
+
+    def attempt():
         snap = snapshot(table_dir)
         if snap["version"] < 0 or not snap.get("schema_json"):
             raise ValueError("cannot ALTER a table with no schema")
@@ -3709,27 +2692,19 @@ def add_columns_delta(table_dir: str, columns: dict[str, str],
             json.dumps(schema, sort_keys=True, separators=(",", ":")),
             snap)
         version = snap["version"] + 1
-        acts = [{"metaData": {
-            "id": str(uuid.uuid5(uuid.NAMESPACE_URL, table_dir)),
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": schema_string,
-            "partitionColumns": snap.get("partition_columns") or [],
-            "configuration": {
-                **(snap.get("metadata_configuration") or {}),
-                **(cm_cfg or {}),
-            },
-        }}, {"commitInfo": {"operation": "ADD COLUMNS"}}]
+        acts = [_metadata_action(
+            table_dir, schema_string, snap.get("partition_columns") or [],
+            {**(snap.get("metadata_configuration") or {}),
+             **(cm_cfg or {})},
+        ), {"commitInfo": {"operation": "ADD COLUMNS"}}]
         if _claim_version(table_dir, version, _stamped_commit(acts),
                           token):
             return {"version": version,
                     "n_columns_added": len(typed)}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
-def enable_column_mapping_delta(table_dir: str,
-                                max_retries: int = 10) -> dict:
+def enable_column_mapping_delta(table_dir: str) -> dict:
     """Turn ON name-mode column mapping (round 15, VERDICT r14
     next-round #3) — the protocol upgrade RENAME/DROP COLUMN require.
     One metadata-only commit: every existing field gets
@@ -3743,7 +2718,8 @@ def enable_column_mapping_delta(table_dir: str,
     Returns ``{version, n_columns_mapped}`` (skipped-shape when
     already enabled)."""
     token = uuid.uuid4().hex[:12]
-    for _ in range(max_retries):
+
+    def attempt():
         snap = snapshot(table_dir)
         if snap["version"] < 0 or not snap.get("schema_json"):
             raise ValueError(
@@ -3763,28 +2739,21 @@ def enable_column_mapping_delta(table_dir: str,
         acts = [
             {"protocol": {"minReaderVersion": 2,
                           "minWriterVersion": 5}},
-            {"metaData": {
-                "id": str(uuid.uuid5(uuid.NAMESPACE_URL, table_dir)),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(schema, sort_keys=True,
-                                           separators=(",", ":")),
-                "partitionColumns": snap.get("partition_columns")
-                or [],
-                "configuration": {
-                    **(snap.get("metadata_configuration") or {}),
-                    _CM_MODE_PROP: "name",
-                    _CM_MAXID_PROP: str(len(fields)),
-                },
-            }},
+            _metadata_action(
+                table_dir,
+                json.dumps(schema, sort_keys=True, separators=(",", ":")),
+                snap.get("partition_columns") or [],
+                {**(snap.get("metadata_configuration") or {}),
+                 _CM_MODE_PROP: "name",
+                 _CM_MAXID_PROP: str(len(fields))},
+            ),
             {"commitInfo": {"operation": "SET TBLPROPERTIES"}},
         ]
         if _claim_version(table_dir, version, _stamped_commit(acts),
                           token):
             return {"version": version,
                     "n_columns_mapped": len(fields)}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 def _require_mapping(snap: dict, verb: str) -> None:
@@ -3798,8 +2767,7 @@ def _require_mapping(snap: dict, verb: str) -> None:
         )
 
 
-def rename_columns_delta(table_dir: str, renames: dict[str, str],
-                         max_retries: int = 10) -> dict:
+def rename_columns_delta(table_dir: str, renames: dict[str, str]) -> dict:
     """ALTER TABLE ... RENAME COLUMN, metadata-only (round 15): under
     column mapping the parquet files key on the stable physicalName,
     so a rename only swaps the LOGICAL name in schemaString — no data
@@ -3810,7 +2778,8 @@ def rename_columns_delta(table_dir: str, renames: dict[str, str],
     if not renames:
         raise ValueError("RENAME COLUMN needs at least one rename")
     token = uuid.uuid4().hex[:12]
-    for _ in range(max_retries):
+
+    def attempt():
         snap = snapshot(table_dir)
         if snap["version"] < 0 or not snap.get("schema_json"):
             raise ValueError("cannot ALTER a table with no schema")
@@ -3844,25 +2813,19 @@ def rename_columns_delta(table_dir: str, renames: dict[str, str],
             for c in (snap.get("partition_columns") or [])
         ]
         version = snap["version"] + 1
-        acts = [{"metaData": {
-            "id": str(uuid.uuid5(uuid.NAMESPACE_URL, table_dir)),
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": json.dumps(schema, sort_keys=True,
-                                       separators=(",", ":")),
-            "partitionColumns": part_cols,
-            "configuration": snap.get("metadata_configuration") or {},
-        }}, {"commitInfo": {"operation": "RENAME COLUMN"}}]
+        acts = [_metadata_action(
+            table_dir,
+            json.dumps(schema, sort_keys=True, separators=(",", ":")),
+            part_cols, snap.get("metadata_configuration") or {},
+        ), {"commitInfo": {"operation": "RENAME COLUMN"}}]
         if _claim_version(table_dir, version, _stamped_commit(acts),
                           token):
             return {"version": version,
                     "n_columns_renamed": len(renames)}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
-def drop_columns_delta(table_dir: str, cols: list[str],
-                       max_retries: int = 10) -> dict:
+def drop_columns_delta(table_dir: str, cols: list[str]) -> dict:
     """ALTER TABLE ... DROP COLUMN, metadata-only (round 15): the
     field leaves schemaString; the physical bytes stay in old files,
     unprojected (the declared schema is the read contract).  Requires
@@ -3874,7 +2837,8 @@ def drop_columns_delta(table_dir: str, cols: list[str],
     if not cols:
         raise ValueError("DROP COLUMN needs at least one column")
     token = uuid.uuid4().hex[:12]
-    for _ in range(max_retries):
+
+    def attempt():
         snap = snapshot(table_dir)
         if snap["version"] < 0 or not snap.get("schema_json"):
             raise ValueError("cannot ALTER a table with no schema")
@@ -3906,21 +2870,17 @@ def drop_columns_delta(table_dir: str, cols: list[str],
         schema["fields"] = [f for f in schema.get("fields", [])
                             if f["name"] not in set(cols)]
         version = snap["version"] + 1
-        acts = [{"metaData": {
-            "id": str(uuid.uuid5(uuid.NAMESPACE_URL, table_dir)),
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": json.dumps(schema, sort_keys=True,
-                                       separators=(",", ":")),
-            "partitionColumns": snap.get("partition_columns") or [],
-            "configuration": snap.get("metadata_configuration") or {},
-        }}, {"commitInfo": {"operation": "DROP COLUMNS"}}]
+        acts = [_metadata_action(
+            table_dir,
+            json.dumps(schema, sort_keys=True, separators=(",", ":")),
+            snap.get("partition_columns") or [],
+            snap.get("metadata_configuration") or {},
+        ), {"commitInfo": {"operation": "DROP COLUMNS"}}]
         if _claim_version(table_dir, version, _stamped_commit(acts),
                           token):
             return {"version": version,
                     "n_columns_dropped": len(cols)}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 def vacuum_delta(table_dir: str, retention_versions: int | None = None,
@@ -4102,7 +3062,6 @@ def update_where_delta(
     assignments: dict[str, str],
     inline_threshold: int = 512,
     checkpoint_interval: int = 10,
-    max_retries: int = 10,
     change_data: bool = True,
 ) -> dict:
     """UPDATE ... SET col = expr WHERE condition — the third DML verb,
@@ -4210,7 +3169,7 @@ def update_where_delta(
             table_dir, token, "upd", l2p=_l2p_of(snap),
         )
 
-    for _ in range(max_retries):
+    def attempt():
         cur = snapshot(table_dir)
         conflicts = _conflicting_paths(snap, cur, sorted(descs))
         if conflicts:
@@ -4219,18 +3178,7 @@ def update_where_delta(
                 f"({conflicts[:3]})"
             )
         version = cur["version"] + 1
-        acts: list[dict] = []
-        for rel in sorted(descs):
-            size, rows = cur["live"][rel]
-            acts.append({"remove": {"path": rel, "dataChange": True}})
-            add = {"path": rel, "size": size, "numRecords": rows,
-                   "partitionValues": pv.get(rel, {}),
-                   "deletionVector": descs[rel], "dataChange": True}
-            if rel in fstats:
-                add["stats"] = json.dumps(
-                    fstats[rel], sort_keys=True, separators=(",", ":")
-                )
-            acts.append({"add": add})
+        acts = _dv_readd_actions(cur, descs, pv, fstats)
         acts.extend({"add": {**a, "dataChange": True}} for a in adds)
         acts.extend(cdc_acts)
         acts.append({"commitInfo": {"operation": "UPDATE",
@@ -4242,9 +3190,7 @@ def update_where_delta(
                     "n_files_touched": len(descs),
                     "n_rows_updated": n_updated,
                     "n_files_added": len(adds)}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 def inspect_delta(spark, table_dir: str, kind: str):

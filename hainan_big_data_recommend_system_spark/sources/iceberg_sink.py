@@ -2,10 +2,13 @@
 
 The engine reads Iceberg tables by walking the metadata tree
 (operators/iceberg.py: version file → manifest list → manifests); this
-module WRITES that tree, Spark-first and transactional, mirroring the
-Delta sink's discipline (sources/delta_sink.py) on the OTHER commit
-model — Iceberg swaps an immutable metadata-file POINTER instead of
-appending a log entry:
+module WRITES that tree, Spark-first and transactional.  It is the
+Iceberg adapter over the format-neutral lake core
+(sources/lake_core.py: staging, condition analysis and pruning, the
+positioned scan, the put-if-absent claim and the commit-retry loop the
+Delta sink shares) and keeps what the OTHER commit model encodes
+differently — Iceberg swaps an immutable metadata-file POINTER instead
+of appending a log entry:
 
 1. data files: the DataFrame writes real parquet via Spark into a
    staging directory, then each part moves under ``data/`` (Hive-style
@@ -75,7 +78,6 @@ import json
 import functools
 import os
 import re
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame
@@ -86,6 +88,23 @@ from ..operators.iceberg import (
     make_table_metadata,
     parse_table_metadata,
     snapshot_live_files,
+)
+from .lake_core import (
+    _abs_uri,
+    _attach_partition_columns,
+    _matching_partition_files,
+    _prune_dml_paths,
+    _scan_with_positions,
+    _with_zorder_value,
+    claim_if_absent,
+    commit_with_retries,
+    footer_int64_bounds,
+    footer_null_counts,
+    footer_string_bounds,
+    parse_partition_transforms,
+    parse_replace_where,
+    stage_parquet_parts,
+    stage_single_parquet,
 )
 
 _VERSION_RE = re.compile(r"^v(\d+)\.metadata\.json$")
@@ -185,6 +204,16 @@ def _prev_state(table_dir: str) -> dict:
         "position_delete_seqs": snap["position_delete_seqs"],
         "position_delete_rows": snap["position_delete_rows"],
     }
+
+
+def insert_columns(table_dir: str) -> list[tuple[str, str | None]]:
+    """The recorded ``(name, type)`` columns a positional SQL INSERT
+    fills, in field-id order (hidden partition fields are layout, not
+    columns)."""
+    prev = _prev_state(table_dir)
+    types = prev.get("field_types", {})
+    return [(n, types.get(i))
+            for i, n in sorted(prev.get("field_names", {}).items())]
 
 
 def _carry_schema_fields(prev: dict) -> list[dict] | None:
@@ -317,95 +346,6 @@ def _resolved_schema_fields(df: DataFrame, prev: dict) -> list[dict]:
 # predicate pruning.  Public knowledge: the Apache Iceberg spec
 # ("Partition Transforms" / "Appendix B: 32-bit Hash Requirements").
 # ---------------------------------------------------------------------------
-
-_TRANSFORM_RE = re.compile(
-    r"^\s*(days?|bucket|truncate)\s*\(\s*(?:(\d+)\s*,\s*)?"
-    r"([A-Za-z_][A-Za-z0-9_]*)\s*\)\s*$"
-)
-
-
-def parse_partition_transforms(partition_by: list[str]) -> list[dict]:
-    """``["days(ts)", "bucket(16, id)", "truncate(4, s)", "col"]`` →
-    ``[{name, transform, source, param}]`` with the spec's derived
-    field names (``ts_day``, ``id_bucket``, ``s_trunc``; identity
-    keeps the column name).  Loud on malformed specs."""
-    out = []
-    for spec in partition_by:
-        m = _TRANSFORM_RE.match(spec)
-        if m:
-            kind, param, col = m.group(1), m.group(2), m.group(3)
-            if kind in ("day", "days"):
-                if param is not None:
-                    raise ValueError(f"days() takes no width: {spec!r}")
-                out.append({"name": f"{col}_day", "transform": "day",
-                            "source": col, "param": None})
-            else:
-                if param is None or int(param) < 1:
-                    raise ValueError(
-                        f"{kind}() needs a positive width/count: "
-                        f"{spec!r}"
-                    )
-                suffix = "bucket" if kind == "bucket" else "trunc"
-                out.append({
-                    "name": f"{col}_{suffix}",
-                    "transform": f"{kind}[{param}]",
-                    "source": col, "param": int(param),
-                })
-        elif re.match(r"^[A-Za-z_][A-Za-z0-9_]*$", spec.strip()):
-            c = spec.strip()
-            out.append({"name": c, "transform": "identity",
-                        "source": c, "param": None})
-        else:
-            raise ValueError(f"unparseable partition field {spec!r}")
-    if len({f["name"] for f in out}) != len(out):
-        raise ValueError(
-            f"duplicate partition field names in {partition_by}"
-        )
-    return out
-
-
-def murmur3_32(data: bytes, seed: int = 0) -> int:
-    """murmur3_x86_32 (public reference implementation; the spec's
-    Appendix B hash) — the Python half of bucket[N], used by the
-    pruner to spell a predicate literal's bucket."""
-    c1, c2 = 0xCC9E2D51, 0x1B873593
-    h = seed & 0xFFFFFFFF
-    n = len(data)
-    for i in range(0, n - n % 4, 4):
-        k = int.from_bytes(data[i:i + 4], "little")
-        k = (k * c1) & 0xFFFFFFFF
-        k = ((k << 15) | (k >> 17)) & 0xFFFFFFFF
-        k = (k * c2) & 0xFFFFFFFF
-        h ^= k
-        h = ((h << 13) | (h >> 19)) & 0xFFFFFFFF
-        h = (h * 5 + 0xE6546B64) & 0xFFFFFFFF
-    tail = data[n - n % 4:]
-    if tail:
-        k = int.from_bytes(tail, "little")
-        k = (k * c1) & 0xFFFFFFFF
-        k = ((k << 15) | (k >> 17)) & 0xFFFFFFFF
-        k = (k * c2) & 0xFFFFFFFF
-        h ^= k
-    h ^= n
-    h ^= h >> 16
-    h = (h * 0x85EBCA6B) & 0xFFFFFFFF
-    h ^= h >> 13
-    h = (h * 0xC2B2AE35) & 0xFFFFFFFF
-    h ^= h >> 16
-    return h
-
-
-def bucket_value(v, n: int) -> int:
-    """The spec's bucket transform: murmur3 of the value's spec
-    encoding — 8-byte little-endian for int-family, raw UTF-8 bytes
-    for strings — then ``(hash & MAX_INT) % n``."""
-    if isinstance(v, str):
-        return (murmur3_32(v.encode("utf-8")) & 0x7FFFFFFF) % n
-    if isinstance(v, bool) or not isinstance(v, int):
-        raise ValueError(f"bucket[] supports int-family/string values, "
-                         f"got {type(v).__name__}")
-    h = murmur3_32(int(v).to_bytes(8, "little", signed=True))
-    return (h & 0x7FFFFFFF) % n
 
 
 def _mm_mul32(c, k: int):
@@ -637,135 +577,6 @@ def with_transform_columns(df: DataFrame, spec: list[dict]) -> DataFrame:
     return df
 
 
-def transform_spelling(field: dict, v) -> str | None:
-    """The Hive-directory spelling of ``v``'s derived partition value
-    under ``field`` — the PRUNER half, which must agree with
-    `with_transform_columns` exactly or pruning would skip files that
-    match.  Returns None when no exact spelling is provable (prune
-    must then keep the file)."""
-    import datetime
-
-    t = field["transform"]
-    if t == "day":
-        if isinstance(v, datetime.datetime):
-            return v.date().isoformat()
-        if isinstance(v, datetime.date):
-            return v.isoformat()
-        if isinstance(v, str):
-            m = re.match(r"^(\d{4}-\d{2}-\d{2})([ T].*)?$", v)
-            return m.group(1) if m else None
-        return None
-    if t.startswith("bucket["):
-        if isinstance(v, bool) or not isinstance(v, (int, str)):
-            return None
-        return str(bucket_value(v, field["param"]))
-    if t.startswith("truncate["):
-        w = field["param"]
-        if isinstance(v, str):
-            return v[:w]
-        if isinstance(v, int) and not isinstance(v, bool):
-            return str(v - (v % w))
-        return None
-    return None
-
-
-#: schema-JSON int-family type names — a bucket/truncate spelling of
-#: an int literal is provably the one the writer derived only when the
-#: source column really holds ints
-_XFORM_INT_TYPES = {"byte", "short", "integer", "long"}
-
-
-def _transform_literals_typed(t: str, src_type: str | None,
-                              values) -> bool:
-    """Declared-type gate for the transform pruning lever (ADVICE r13
-    high): a literal whose Python type mismatches the declared SOURCE
-    column type spells a DIFFERENT partition value than the one the
-    writer derived — e.g. ``id = '42'`` on a ``bucket[16]`` long
-    column spells the string hash's bucket while the data was hashed
-    as int64, so files holding rows Spark's coercing filter WOULD
-    match get silently skipped.  True only when every literal's type
-    matches the declared source type; unknown declared type is never
-    provable."""
-    import datetime
-
-    if t == "day":
-        # day sources are timestamp/date; string literals are parsed
-        # as ISO date prefixes (the coercion Spark itself applies)
-        if src_type not in ("timestamp", "timestamp_ntz", "date"):
-            return False
-        return all(
-            isinstance(v, (datetime.date, datetime.datetime, str))
-            for v in values
-        )
-    # bucket[N] / truncate[W]
-    if src_type in _XFORM_INT_TYPES:
-        return all(isinstance(v, int) and not isinstance(v, bool)
-                   for v in values)
-    if src_type == "string":
-        return all(isinstance(v, str) for v in values)
-    return False
-
-
-def transform_constraint_spellings(
-    field: dict, cc: dict, src_type: str | None = None,
-) -> set[str] | None:
-    """The partition spellings a predicate constraint on a transform's
-    SOURCE column allows — the transform-aware pruning lever
-    (`_prune_dml_paths` consumes this): equality sets spell directly;
-    a bounded range enumerates day / truncate-multiple spellings (a
-    ``ts >= X AND ts < Y`` DELETE opens only the matching day
-    partitions).  ``src_type`` is the declared schema-JSON type of the
-    SOURCE column; literals whose Python type mismatches it are not
-    provably spellable (ADVICE r13 high — a type-coerced comparison
-    would match rows the mismatched spelling skips).  Returns None
-    when no sound finite spelling set exists (type mismatch, unbounded
-    ranges, oversized spans, unspellable values) — the caller must
-    then skip this lever, never guess."""
-    import datetime
-
-    t = field["transform"]
-    lits = list(cc["eq"]) if cc["eq"] else [
-        v for v in (cc["lo"], cc["hi"]) if v is not None
-    ]
-    if not _transform_literals_typed(t, src_type, lits):
-        return None
-    if cc["eq"]:
-        out = set()
-        for v in cc["eq"]:
-            s = transform_spelling(field, v)
-            if s is None:
-                return None
-            out.add(s)
-        return out
-    lo, hi = cc["lo"], cc["hi"]
-    if lo is None or hi is None:
-        return None  # unbounded range: infinite spelling set
-    if t == "day":
-        slo = transform_spelling(field, lo)
-        shi = transform_spelling(field, hi)
-        if slo is None or shi is None:
-            return None
-        d0 = datetime.date.fromisoformat(slo)
-        d1 = datetime.date.fromisoformat(shi)
-        n = (d1 - d0).days
-        if n < 0 or n > 3660:  # ~10 years: beyond that, don't bother
-            return None
-        return {
-            (d0 + datetime.timedelta(days=i)).isoformat()
-            for i in range(n + 1)
-        }
-    if t.startswith("truncate[") and all(
-        isinstance(v, int) and not isinstance(v, bool) for v in (lo, hi)
-    ):
-        w = field["param"]
-        lo_t = lo - lo % w
-        hi_t = hi - hi % w
-        if hi_t < lo_t or (hi_t - lo_t) // w > 4096:
-            return None
-        return {str(x) for x in range(lo_t, hi_t + 1, w)}
-    return None  # bucket[] ranges don't map to buckets
-
-
 def _stage_iceberg_files(
     df: DataFrame,
     table_dir: str,
@@ -774,18 +585,11 @@ def _stage_iceberg_files(
     bloom_filter_cols: list[str] | None = None,
 ) -> list[dict]:
     """Flat manifest-entry bodies from the SHARED staging pipeline
-    (sources/delta_sink.stage_parquet_parts — one implementation, two
+    (sources/lake_core.stage_parquet_parts — one implementation, two
     sinks): parts land under ``data/``, partition tuples parse back
     from the Hive layout, and name-keyed int64 + string bounds come
     from the hand footer reader (the caller translates names → field
     ids)."""
-    from .delta_sink import (
-        footer_int64_bounds,
-        footer_null_counts,
-        footer_string_bounds,
-        stage_parquet_parts,
-    )
-
     adds: list[dict] = []
     for p in stage_parquet_parts(
         df, table_dir, token, partition_by=partition_by,
@@ -834,24 +638,18 @@ def _claim_metadata(
     token: str,
     blobs: dict[str, bytes],
 ) -> bool:
-    """Put-if-absent pointer swap; on a lost race this attempt's blobs
+    """Put-if-absent pointer swap (`claim_if_absent` on
+    ``v{version}.metadata.json``); on a lost race this attempt's blobs
     are unlinked (they were never referenced)."""
     md = _meta_dir(table_dir)
     final = os.path.join(md, f"v{version}.metadata.json")
-    tmp = final + f".tmp-{token}"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(meta_text)
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        os.unlink(tmp)
+    if not claim_if_absent(final, meta_text, token):
         for rel in blobs:
             try:
                 os.unlink(os.path.join(table_dir, rel))
             except OSError:
                 pass
         return False
-    os.unlink(tmp)
     hint = os.path.join(md, "version-hint.text")
     with open(hint + f".tmp-{token}", "w", encoding="utf-8") as fh:
         fh.write(str(version))
@@ -859,11 +657,110 @@ def _claim_metadata(
     return True
 
 
+def _write_snapshot_blobs(table_dir: str, token: str, version: int,
+                          entries: list[dict],
+                          blobs: dict[str, bytes]) -> str:
+    """Write this attempt's manifests (``blobs``) and a manifest list
+    over ``entries``; returns the list's path.  The list joins
+    ``blobs``, so a lost claim unlinks every blob the attempt wrote."""
+    ml_path = f"metadata/ml-{token}-{version}.avro"
+    blobs[ml_path] = make_manifest_list(entries)
+    for rel, blob in blobs.items():
+        with open(os.path.join(table_dir, rel), "wb") as fh:
+            fh.write(blob)
+    return ml_path
+
+
+def _ml_entry(path: str, blob: bytes, sid: int, seq: int, content=0,
+              n_add=0, n_exist=0, n_del=0) -> dict:
+    """The manifest-list entry of manifest ``blob`` at ``path``, added
+    by snapshot ``sid`` at sequence number ``seq``."""
+    return {"manifest_path": path, "manifest_length": len(blob),
+            "sequence_number": seq, "added_snapshot_id": sid,
+            "content": content, "added_files_count": n_add,
+            "existing_files_count": n_exist,
+            "deleted_files_count": n_del}
+
+
+def _add_manifest(adds: list[dict], field_ids: dict[str, int],
+                  part_fields: tuple, sid: int, seq: int, token: str,
+                  version: int, blobs: dict[str, bytes],
+                  kind: str = "add") -> dict:
+    """The ADDED-entries manifest of this commit's staged data files,
+    put into ``blobs``; returns its manifest-list entry."""
+    blob = make_manifest(
+        [{"status": 1, "snapshot_id": sid,
+          **_ids_bounds(a, field_ids)} for a in adds],
+        partition_fields=part_fields,
+    )
+    path = f"metadata/m-{token}-{version}-{kind}.avro"
+    blobs[path] = blob
+    return _ml_entry(path, blob, sid, seq, n_add=len(adds))
+
+
+def _drop_deletes_manifest(paths: list[str], eq_ids_of: dict,
+                           sid: int, seq: int, token: str, version: int,
+                           blobs: dict[str, bytes]) -> dict:
+    """A DELETED-entries manifest tombstoning the delete files
+    ``paths`` (equality deletes keep their ids), put into ``blobs``;
+    returns its manifest-list entry."""
+    blob = make_manifest([
+        {"status": 2, "snapshot_id": sid, "file_path": p,
+         "record_count": 0, "file_size": 0,
+         **({"content": 2, "equality_ids": eq_ids_of[p]}
+            if p in eq_ids_of else {"content": 1})}
+        for p in sorted(paths)
+    ])
+    path = f"metadata/m-{token}-{version}-drop-dels.avro"
+    blobs[path] = blob
+    return _ml_entry(path, blob, sid, seq, content=1, n_del=len(paths))
+
+
+def _carried_metadata(table_dir: str, prev: dict,
+                      snapshot: tuple[int, str, str] | None = None,
+                      parent: int | None = None,
+                      branch: str | None = None,
+                      **overrides) -> str:
+    """The next metadata text: every field carried forward from
+    ``prev`` with ``overrides`` applied — the one place the list of
+    carried fields lives.  Pointer-only verbs (schema changes, refs,
+    rollback, expiration) pass overrides alone.
+    ``snapshot=(sid, manifest_list, operation)`` is the NEW-SNAPSHOT
+    form: the snapshot joins the list with its operation and its
+    parent (``parent``, default main's current) and becomes main's
+    current — or only ``branch``'s head, main untouched."""
+    kw = dict(
+        snapshots=prev["snapshots"], current=prev["current"],
+        schema_fields=_carry_schema_fields(prev),
+        properties=prev.get("properties"),
+        partition_spec=prev.get("partition_spec") or None,
+        snapshot_ops=prev.get("snapshot_ops") or None,
+        snapshot_ts=prev.get("snapshot_ts"),
+        table_dir=table_dir,
+        snapshot_parents=prev.get("snapshot_parents") or None,
+        refs=prev.get("refs") or None,
+    )
+    if snapshot is not None:
+        sid, ml_path, op = snapshot
+        kw["snapshots"] = {**prev["snapshots"], sid: ml_path}
+        kw["snapshot_ops"] = {**prev.get("snapshot_ops", {}), sid: op}
+        kw["snapshot_parents"] = {
+            **prev.get("snapshot_parents", {}),
+            sid: prev["current"] if parent is None else parent,
+        }
+        if branch is None:
+            kw["current"] = sid
+        else:
+            kw["refs"] = {**(prev.get("refs") or {}),
+                          branch: {"snapshot_id": sid, "type": "branch"}}
+    kw.update(overrides)
+    return make_table_metadata(**kw)
+
+
 def write_iceberg(
     df: DataFrame,
     table_dir: str,
     mode: str = "append",
-    max_retries: int = 10,
     partition_by: list[str] | None = None,
     bloom_filter_cols: list[str] | None = None,
     txn: tuple[str, int] | None = None,
@@ -953,8 +850,6 @@ def write_iceberg(
         # PARTITION-SCOPED overwrite (round 12): the other partitions'
         # files ride along untouched, so schema and layout agreement
         # are enforced exactly like an append
-        from .delta_sink import parse_replace_where
-
         if merge_schema:
             _check_schema_is_evolution(df, prev0)
         else:
@@ -1016,7 +911,7 @@ def write_iceberg(
     field_ids = {f["name"]: f["id"] for f in schema_fields}
     part_fields = tuple(part_names)
 
-    for _ in range(max_retries):
+    def attempt():
         prev = _prev_state(table_dir)
         branch_head = None
         if branch is not None:
@@ -1038,22 +933,9 @@ def write_iceberg(
         sid = (max(prev["snapshots"], default=0)) + 1
         seq = prev["last_seq"] + 1
 
-        added_manifest = make_manifest(
-            [{"status": 1, "snapshot_id": sid,
-              **_ids_bounds(a, field_ids)} for a in adds],
-            partition_fields=part_fields,
-        )
-        add_path = f"metadata/m-{token}-{version}-add.avro"
-        blobs: dict[str, bytes] = {add_path: added_manifest}
-
-        def ml_entry(path: str, blob: bytes, n_add=0, n_exist=0,
-                     n_del=0, content=0) -> dict:
-            return {"manifest_path": path, "manifest_length": len(blob),
-                    "sequence_number": seq, "added_snapshot_id": sid,
-                    "content": content,
-                    "added_files_count": n_add,
-                    "existing_files_count": n_exist,
-                    "deleted_files_count": n_del}
+        blobs: dict[str, bytes] = {}
+        add_entry = _add_manifest(adds, field_ids, part_fields, sid, seq,
+                                  token, version, blobs)
 
         entries: list[dict] = []
         removed = 0
@@ -1070,8 +952,6 @@ def write_iceberg(
             # partition-scoped: prior manifests ride along; a later
             # DELETED-entries manifest tombstones just the replaced
             # partitions' files (liveness resolves in list order)
-            from .delta_sink import _matching_partition_files
-
             entries.extend(dict(e) for e in prev["manifest_entries"])
             reused = len(entries)
             pv = prev["partition_values"]
@@ -1090,9 +970,8 @@ def write_iceberg(
                 )
                 del_path = f"metadata/m-{token}-{version}-rdel.avro"
                 blobs[del_path] = del_manifest
-                entries.append(
-                    ml_entry(del_path, del_manifest, n_del=removed)
-                )
+                entries.append(_ml_entry(del_path, del_manifest, sid, seq,
+                                         n_del=removed))
             # delete files whose remaining LIVE targets were all
             # replaced stay listed forever otherwise — every later
             # scan keeps reading now-inapplicable delete parquets and
@@ -1134,9 +1013,8 @@ def write_iceberg(
                 )
                 del_path = f"metadata/m-{token}-{version}-del.avro"
                 blobs[del_path] = del_manifest
-                entries.append(
-                    ml_entry(del_path, del_manifest, n_del=removed)
-                )
+                entries.append(_ml_entry(del_path, del_manifest, sid, seq,
+                                         n_del=removed))
             # a FULL overwrite removes every prior data file, so every
             # live delete file is now inapplicable by construction —
             # tombstone them all, no target scan needed (ADVICE r12
@@ -1144,56 +1022,25 @@ def write_iceberg(
             drop_dels = (list(prev["position_delete_files"])
                          + sorted(eq_ids_of))
         if drop_dels:
-            del_del_manifest = make_manifest([
-                {"status": 2, "snapshot_id": sid, "file_path": p,
-                 "record_count": 0, "file_size": 0,
-                 **({"content": 2, "equality_ids": eq_ids_of[p]}
-                    if p in eq_ids_of else {"content": 1})}
-                for p in sorted(drop_dels)
-            ])
-            ddl_path = f"metadata/m-{token}-{version}-drop-dels.avro"
-            blobs[ddl_path] = del_del_manifest
-            entries.append(ml_entry(ddl_path, del_del_manifest,
-                                    content=1, n_del=len(drop_dels)))
-        entries.append(
-            ml_entry(add_path, added_manifest, n_add=len(adds))
-        )
-        ml_blob = make_manifest_list(entries)
-        ml_path = f"metadata/ml-{token}-{version}.avro"
-        blobs[ml_path] = ml_blob
-        for rel, blob in blobs.items():
-            with open(os.path.join(table_dir, rel), "wb") as fh:
-                fh.write(blob)
-
-        snapshots = {**prev["snapshots"], sid: ml_path}
-        refs = dict(prev.get("refs") or {})
-        if branch is not None:
-            refs[branch] = {"snapshot_id": sid, "type": "branch"}
-        meta_text = make_table_metadata(
-            snapshots,
-            current=(prev["current"] if branch is not None else sid),
-            schema_fields=schema_fields,
-            properties=props,
+            entries.append(_drop_deletes_manifest(
+                drop_dels, eq_ids_of, sid, seq, token, version, blobs))
+        entries.append(add_entry)
+        ml_path = _write_snapshot_blobs(table_dir, token, version,
+                                        entries, blobs)
+        op = "append" if mode == "append" else "overwrite"
+        meta_text = _carried_metadata(
+            table_dir, prev, snapshot=(sid, ml_path, op),
+            parent=branch_head, branch=branch,
+            schema_fields=schema_fields, properties=props,
             partition_spec=(pspec or prev.get("partition_spec")
                             or None),
-            snapshot_ops={**prev.get("snapshot_ops", {}), sid: ("append" if mode == "append" else "overwrite")},
-            snapshot_ts=prev.get("snapshot_ts"),
-            table_dir=table_dir,
-            snapshot_parents={
-                **prev.get("snapshot_parents", {}),
-                sid: (branch_head if branch is not None
-                      else prev["current"]),
-            },
-            refs=refs or None,
         )
         if _claim_metadata(table_dir, version, meta_text, token, blobs):
             return {"version": version, "snapshot_id": sid,
                     "n_files": len(adds),
                     "n_records": sum(a["record_count"] for a in adds),
                     "n_removed": removed, "n_manifests_reused": reused}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 def _alive_rows_with_positions(spark, table_dir: str, prev: dict,
@@ -1207,12 +1054,6 @@ def _alive_rows_with_positions(spark, table_dir: str, prev: dict,
     the filter commutes and the scan stays narrow); ``paths`` narrows
     the scan to a subset of the live files (compaction groups)."""
     from pyspark.sql import functions as F
-
-    from .delta_sink import (
-        _abs_uri,
-        _attach_partition_columns,
-        _scan_with_positions,
-    )
 
     if paths is None:
         paths = sorted(prev["live"])
@@ -1385,8 +1226,6 @@ def _stage_position_delete_files(
     (empty shards drop)."""
     from pyspark.sql import functions as F
 
-    from .delta_sink import stage_parquet_parts
-
     if any(pv.get(p) for p in paths):
         # partitioned table: one delete file per partition tuple
         tuples = sorted({
@@ -1436,21 +1275,15 @@ def _posdel_manifest_entries(
         for d in del_files
     ])
     del_mpath = f"metadata/m-{token}-{version}-posdel.avro"
-    ml_entry = {
-        "manifest_path": del_mpath,
-        "manifest_length": len(del_manifest),
-        "sequence_number": seq, "added_snapshot_id": sid,
-        "content": 1, "added_files_count": len(del_files),
-        "existing_files_count": 0, "deleted_files_count": 0,
-    }
-    return del_mpath, del_manifest, ml_entry
+    return del_mpath, del_manifest, _ml_entry(
+        del_mpath, del_manifest, sid, seq, content=1,
+        n_add=len(del_files))
 
 
 def delete_where_iceberg(
     spark,
     table_dir: str,
     condition: str,
-    max_retries: int = 10,
     branch: str | None = None,
 ) -> dict:
     """DELETE WHERE via format-v2 POSITION DELETE files — no data file
@@ -1477,12 +1310,9 @@ def delete_where_iceberg(
     n_delete_files}`` (``version None`` when nothing new matched)."""
     from pyspark.sql import functions as F
 
-    from .delta_sink import _prune_dml_paths
-
     prev = _prev_state(table_dir)
-    branch_head = None
     if branch is not None:
-        prev, branch_head = _branch_overlay(table_dir, prev, branch)
+        prev, _ = _branch_overlay(table_dir, prev, branch)
     if not prev["live"]:
         return {"version": None, "snapshot_id": None,
                 "n_rows_deleted": 0, "n_delete_files": 0}
@@ -1510,60 +1340,32 @@ def delete_where_iceberg(
         return {"version": None, "snapshot_id": None,
                 "n_rows_deleted": 0, "n_delete_files": 0}
 
-    for _ in range(max_retries):
+    def attempt():
         cur = _prev_state(table_dir)
+        branch_head = None
         if branch is not None:
             cur, branch_head = _branch_overlay(table_dir, cur, branch)
-        conflicts = _iceberg_conflicts(prev, cur, paths)
-        if (conflicts
-                or cur["position_delete_files"]
-                != prev["position_delete_files"]
-                or cur["equality_deletes"] != prev["equality_deletes"]):
-            raise ValueError(
-                "delete conflict: table changed concurrently since "
-                f"the position scan ({conflicts[:3] or 'delete files'})"
-            )
+        _refuse_concurrent_change(prev, cur, paths, "delete", "position")
         version = cur["version"] + 1
         sid = (max(cur["snapshots"], default=0)) + 1
         seq = cur["last_seq"] + 1
-        del_mpath, del_manifest, ml_entry = _posdel_manifest_entries(
+        del_mpath, del_manifest, del_entry = _posdel_manifest_entries(
             del_files, sid, seq, token, version,
         )
         entries = [dict(e) for e in cur["manifest_entries"]]
-        entries.append(ml_entry)
-        ml_blob = make_manifest_list(entries)
-        ml_path = f"metadata/ml-{token}-{version}.avro"
-        blobs = {del_mpath: del_manifest, ml_path: ml_blob}
-        for rel, blob in blobs.items():
-            with open(os.path.join(table_dir, rel), "wb") as fh:
-                fh.write(blob)
-        snapshots = {**cur["snapshots"], sid: ml_path}
-        refs = dict(cur.get("refs") or {})
-        if branch is not None:
-            refs[branch] = {"snapshot_id": sid, "type": "branch"}
-        meta_text = make_table_metadata(
-            snapshots,
-            current=(cur["current"] if branch is not None else sid),
-            schema_fields=_carry_schema_fields(cur),
-            properties=cur.get("properties"),
-            partition_spec=cur.get("partition_spec") or None,
-            snapshot_ops={**cur.get("snapshot_ops", {}), sid: "delete"},
-            snapshot_ts=cur.get("snapshot_ts"),
-            table_dir=table_dir,
-            snapshot_parents={
-                **cur.get("snapshot_parents", {}),
-                sid: (branch_head if branch is not None
-                      else cur["current"]),
-            },
-            refs=refs or None,
+        entries.append(del_entry)
+        blobs = {del_mpath: del_manifest}
+        ml_path = _write_snapshot_blobs(table_dir, token, version,
+                                        entries, blobs)
+        meta_text = _carried_metadata(
+            table_dir, cur, snapshot=(sid, ml_path, "delete"),
+            parent=branch_head, branch=branch,
         )
         if _claim_metadata(table_dir, version, meta_text, token, blobs):
             return {"version": version, "snapshot_id": sid,
                     "n_rows_deleted": n_del,
                     "n_delete_files": len(del_files)}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 def update_where_iceberg(
@@ -1571,7 +1373,6 @@ def update_where_iceberg(
     table_dir: str,
     condition: str,
     assignments: dict[str, str],
-    max_retries: int = 10,
     branch: str | None = None,
 ) -> dict:
     """UPDATE ... SET col = expr WHERE condition on format #2 — closing
@@ -1598,14 +1399,12 @@ def update_where_iceberg(
         if not isinstance(c, str) or not c:
             raise ValueError("assignment target must be a column name")
     prev = _prev_state(table_dir)
-    branch_head = None
     if branch is not None:
-        prev, branch_head = _branch_overlay(table_dir, prev, branch)
+        prev, _ = _branch_overlay(table_dir, prev, branch)
     if not prev["live"]:
         return {"version": None, "snapshot_id": None,
                 "n_rows_updated": 0, "n_files_added": 0,
                 "n_delete_files": 0}
-    from .delta_sink import _prune_dml_paths
 
     paths, _prune_counts = _prune_dml_paths(
         table_dir, prev, condition, declared=_declared_types(prev),
@@ -1665,75 +1464,36 @@ def update_where_iceberg(
     }
     part_fields = tuple(part_cols)
 
-    for _ in range(max_retries):
+    def attempt():
         cur = _prev_state(table_dir)
+        branch_head = None
         if branch is not None:
             cur, branch_head = _branch_overlay(table_dir, cur, branch)
-        conflicts = _iceberg_conflicts(prev, cur, paths)
-        if (conflicts
-                or cur["position_delete_files"]
-                != prev["position_delete_files"]
-                or cur["equality_deletes"] != prev["equality_deletes"]):
-            raise ValueError(
-                "update conflict: table changed concurrently since "
-                f"the position scan ({conflicts[:3] or 'delete files'})"
-            )
+        _refuse_concurrent_change(prev, cur, paths, "update", "position")
         version = cur["version"] + 1
         sid = (max(cur["snapshots"], default=0)) + 1
         seq = cur["last_seq"] + 1
         del_mpath, del_manifest, del_entry = _posdel_manifest_entries(
             del_files, sid, seq, token, version,
         )
-        add_manifest = make_manifest(
-            [{"status": 1, "snapshot_id": sid,
-              **_ids_bounds(a, field_ids)} for a in adds],
-            partition_fields=part_fields,
-        )
-        add_mpath = f"metadata/m-{token}-{version}-add.avro"
+        blobs = {del_mpath: del_manifest}
         entries = [dict(e) for e in cur["manifest_entries"]]
         entries.append(del_entry)
-        entries.append({
-            "manifest_path": add_mpath,
-            "manifest_length": len(add_manifest),
-            "sequence_number": seq, "added_snapshot_id": sid,
-            "content": 0, "added_files_count": len(adds),
-            "existing_files_count": 0, "deleted_files_count": 0,
-        })
-        ml_blob = make_manifest_list(entries)
-        ml_path = f"metadata/ml-{token}-{version}.avro"
-        blobs = {del_mpath: del_manifest, add_mpath: add_manifest,
-                 ml_path: ml_blob}
-        for rel, blob in blobs.items():
-            with open(os.path.join(table_dir, rel), "wb") as fh:
-                fh.write(blob)
-        snapshots = {**cur["snapshots"], sid: ml_path}
-        refs = dict(cur.get("refs") or {})
-        if branch is not None:
-            refs[branch] = {"snapshot_id": sid, "type": "branch"}
-        meta_text = make_table_metadata(
-            snapshots,
-            current=(cur["current"] if branch is not None else sid),
+        entries.append(_add_manifest(adds, field_ids, part_fields, sid,
+                                     seq, token, version, blobs))
+        ml_path = _write_snapshot_blobs(table_dir, token, version,
+                                        entries, blobs)
+        meta_text = _carried_metadata(
+            table_dir, cur, snapshot=(sid, ml_path, "overwrite"),
+            parent=branch_head, branch=branch,
             schema_fields=_carry_schema_fields(cur) or schema_fields,
-            properties=cur.get("properties"),
-            partition_spec=cur.get("partition_spec") or None,
-            snapshot_ops={**cur.get("snapshot_ops", {}), sid: "overwrite"},
-            snapshot_ts=cur.get("snapshot_ts"),
-            table_dir=table_dir,
-            snapshot_parents={
-                **cur.get("snapshot_parents", {}),
-                sid: (branch_head if branch is not None
-                      else cur["current"]),
-            },
-            refs=refs or None,
         )
         if _claim_metadata(table_dir, version, meta_text, token, blobs):
             return {"version": version, "snapshot_id": sid,
                     "n_rows_updated": n_updated,
                     "n_files_added": len(adds),
                     "n_delete_files": len(del_files)}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 #: Spark simpleString → schema-JSON type names (what the shared
@@ -1794,6 +1554,21 @@ def _iceberg_conflicts(prev: dict, cur: dict, paths) -> list[str]:
     ]
 
 
+def _refuse_concurrent_change(prev: dict, cur: dict, paths, verb: str,
+                              scan: str) -> None:
+    """Abort ``verb`` when its scanned files conflict
+    (`_iceberg_conflicts`) or the live delete files moved since the
+    ``scan`` scan — the positions it computed no longer hold."""
+    conflicts = _iceberg_conflicts(prev, cur, paths)
+    if (conflicts
+            or cur["position_delete_files"] != prev["position_delete_files"]
+            or cur["equality_deletes"] != prev["equality_deletes"]):
+        raise ValueError(
+            f"{verb} conflict: table changed concurrently since "
+            f"the {scan} scan ({conflicts[:3] or 'delete files'})"
+        )
+
+
 def _delete_file_seqs(table_dir: str, prev: dict) -> dict[str, int]:
     """``{delete_file_path: sequence_number}`` in ONE pass over the
     delete manifests (each carries its snapshot's sequence number) —
@@ -1825,7 +1600,6 @@ def _merge_iceberg_scan(
     source: DataFrame,
     table_dir: str,
     key_cols: list[str],
-    max_retries: int,
     matched_delete: str | None,
     matched_update: str | None,
     not_matched_insert: str | None,
@@ -2055,7 +1829,8 @@ def _merge_iceberg_scan(
                 "n_files_added": 0, "n_records_added": 0,
                 "n_delete_keys": 0, "n_rows_deleted": 0}
     part_fields = tuple(part_cols)
-    for _ in range(max_retries):
+
+    def attempt():
         cur = _prev_state(table_dir)
         # the read set is the WHOLE live table (matched positions and
         # key absence were both computed against prev0's scan), so any
@@ -2081,50 +1856,22 @@ def _merge_iceberg_scan(
             blobs[pd_mpath] = pd_manifest
             entries.append(pd_entry)
         if adds:
-            add_manifest = make_manifest(
-                [{"status": 1, "snapshot_id": sid,
-                  **_ids_bounds(a, field_ids)} for a in adds],
-                partition_fields=part_fields,
-            )
-            add_mpath = f"metadata/m-{token}-{version}-add.avro"
-            blobs[add_mpath] = add_manifest
-            entries.append({
-                "manifest_path": add_mpath,
-                "manifest_length": len(add_manifest),
-                "sequence_number": seq, "added_snapshot_id": sid,
-                "content": 0, "added_files_count": len(adds),
-                "existing_files_count": 0, "deleted_files_count": 0,
-            })
-        ml_blob = make_manifest_list(entries)
-        ml_path = f"metadata/ml-{token}-{version}.avro"
-        blobs[ml_path] = ml_blob
-        for rel, blob in blobs.items():
-            with open(os.path.join(table_dir, rel), "wb") as fh:
-                fh.write(blob)
-        snapshots = {**cur["snapshots"], sid: ml_path}
-        meta_text = make_table_metadata(
-            snapshots, current=sid, schema_fields=schema_fields,
-            properties=cur.get("properties"),
-            partition_spec=cur.get("partition_spec") or None,
-            snapshot_ops={**cur.get("snapshot_ops", {}),
-                          sid: "overwrite"},
-            snapshot_ts=cur.get("snapshot_ts"),
-            table_dir=table_dir,
-            snapshot_parents={**cur.get("snapshot_parents", {}),
-                              sid: cur["current"]},
-            refs=cur.get("refs") or None,
+            entries.append(_add_manifest(adds, field_ids, part_fields,
+                                         sid, seq, token, version, blobs))
+        ml_path = _write_snapshot_blobs(table_dir, token, version,
+                                        entries, blobs)
+        meta_text = _carried_metadata(
+            table_dir, cur, snapshot=(sid, ml_path, "overwrite"),
+            schema_fields=schema_fields,
         )
-        if _claim_metadata(table_dir, version, meta_text, token,
-                           blobs):
+        if _claim_metadata(table_dir, version, meta_text, token, blobs):
             return {"version": version, "snapshot_id": sid,
                     "n_files_added": len(adds),
                     "n_records_added": sum(
                         a["record_count"] for a in adds),
                     "n_delete_keys": 0,
                     "n_rows_deleted": n_del_rows}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 def merge_iceberg(
@@ -2132,7 +1879,6 @@ def merge_iceberg(
     source: DataFrame,
     table_dir: str,
     key_cols: list[str],
-    max_retries: int = 10,
     matched_delete: str | None = None,
     matched_update: str | None = None,
     not_matched_by_source_delete: str | None = None,
@@ -2202,7 +1948,7 @@ def merge_iceberg(
         )
     if needs_scan:
         return _merge_iceberg_scan(
-            spark, source, table_dir, key_cols, max_retries,
+            spark, source, table_dir, key_cols,
             matched_delete, matched_update, not_matched_insert,
             not_matched_by_source_delete, matched_set,
             matched_residual,
@@ -2275,8 +2021,6 @@ def merge_iceberg(
     n_keys = 0
     eq_size = 0
     if prev0["live"]:
-        from .delta_sink import stage_single_parquet
-
         eq_keys = stage_src.select(*key_cols)
         if del_src is not None:
             eq_keys = eq_keys.unionByName(del_src.select(*key_cols))
@@ -2293,7 +2037,8 @@ def merge_iceberg(
                 "n_delete_keys": 0, "n_rows_deleted": 0}
 
     part_fields = tuple(part_cols)
-    for _ in range(max_retries):
+
+    def attempt():
         cur = _prev_state(table_dir)
         # logical-conflict rule (ADVICE r11 medium): the equality
         # delete was sized against prev0 — a concurrent writer
@@ -2348,13 +2093,8 @@ def merge_iceberg(
             ])
             del_mpath = f"metadata/m-{token}-{version}-eqdel.avro"
             blobs[del_mpath] = del_manifest
-            entries.append({
-                "manifest_path": del_mpath,
-                "manifest_length": len(del_manifest),
-                "sequence_number": seq, "added_snapshot_id": sid,
-                "content": 1, "added_files_count": 1,
-                "existing_files_count": 0, "deleted_files_count": 0,
-            })
+            entries.append(_ml_entry(del_mpath, del_manifest, sid, seq,
+                                     content=1, n_add=1))
         if nmbs_del_files:
             pd_mpath, pd_manifest, pd_entry = _posdel_manifest_entries(
                 nmbs_del_files, sid, seq, token, version,
@@ -2362,37 +2102,13 @@ def merge_iceberg(
             blobs[pd_mpath] = pd_manifest
             entries.append(pd_entry)
         if adds:
-            add_manifest = make_manifest(
-                [{"status": 1, "snapshot_id": sid,
-                  **_ids_bounds(a, field_ids)} for a in adds],
-                partition_fields=part_fields,
-            )
-            add_mpath = f"metadata/m-{token}-{version}-add.avro"
-            blobs[add_mpath] = add_manifest
-            entries.append({
-                "manifest_path": add_mpath,
-                "manifest_length": len(add_manifest),
-                "sequence_number": seq, "added_snapshot_id": sid,
-                "content": 0, "added_files_count": len(adds),
-                "existing_files_count": 0, "deleted_files_count": 0,
-            })
-        ml_blob = make_manifest_list(entries)
-        ml_path = f"metadata/ml-{token}-{version}.avro"
-        blobs[ml_path] = ml_blob
-        for rel, blob in blobs.items():
-            with open(os.path.join(table_dir, rel), "wb") as fh:
-                fh.write(blob)
-        snapshots = {**cur["snapshots"], sid: ml_path}
-        meta_text = make_table_metadata(
-            snapshots, current=sid, schema_fields=schema_fields,
-            properties=cur.get("properties"),
-            partition_spec=cur.get("partition_spec") or None,
-            snapshot_ops={**cur.get("snapshot_ops", {}), sid: "overwrite"},
-            snapshot_ts=cur.get("snapshot_ts"),
-            table_dir=table_dir,
-            snapshot_parents={**cur.get("snapshot_parents", {}),
-                              sid: cur["current"]},
-            refs=cur.get("refs") or None,
+            entries.append(_add_manifest(adds, field_ids, part_fields,
+                                         sid, seq, token, version, blobs))
+        ml_path = _write_snapshot_blobs(table_dir, token, version,
+                                        entries, blobs)
+        meta_text = _carried_metadata(
+            table_dir, cur, snapshot=(sid, ml_path, "overwrite"),
+            schema_fields=schema_fields,
         )
         if _claim_metadata(table_dir, version, meta_text, token, blobs):
             return {"version": version, "snapshot_id": sid,
@@ -2401,9 +2117,7 @@ def merge_iceberg(
                         a["record_count"] for a in adds),
                     "n_delete_keys": n_keys,
                     "n_rows_deleted": n_nmbs}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 def read_iceberg_table(spark, table_dir: str,
@@ -2488,8 +2202,6 @@ def _posdel_targets(
     delete file is always correct, dropping one never is)."""
     from pyspark.sql import functions as F
 
-    from .delta_sink import _abs_uri
-
     if not delete_files:
         return {}
     abs_to_rel = {_abs_uri(table_dir, dp): dp for dp in delete_files}
@@ -2515,7 +2227,6 @@ def rewrite_data_files_iceberg(
     table_dir: str,
     small_file_bytes: int = 32 * 1024 * 1024,
     target_partitions: int = 1,
-    max_retries: int = 10,
     zorder_by: list[str] | None = None,
 ) -> dict:
     """COMPACTION — Iceberg's ``rewrite_data_files``, the
@@ -2636,8 +2347,6 @@ def rewrite_data_files_iceberg(
         # is range-partitioned and sorted by the Morton code, so every
         # output file covers a small bounding box in the clustered
         # dimensions and the manifest bounds prune on EITHER one
-        from .delta_sink import _with_zorder_value
-
         df = _with_zorder_value(df, list(zorder_by))
         if part_cols:
             df = df.repartition(*part_cols).sortWithinPartitions("__zval")
@@ -2661,31 +2370,14 @@ def rewrite_data_files_iceberg(
     eq_ids_of = {e["path"]: list(e["equality_ids"])
                  for e in prev["equality_deletes"]}
 
-    for _ in range(max_retries):
+    def attempt():
         cur = _prev_state(table_dir)
-        conflicts = _iceberg_conflicts(prev, cur, small)
-        if (conflicts
-                or cur["position_delete_files"]
-                != prev["position_delete_files"]
-                or cur["equality_deletes"] != prev["equality_deletes"]):
-            raise ValueError(
-                "rewrite conflict: table changed concurrently since "
-                f"the compaction scan ({conflicts[:3] or 'delete files'})"
-            )
+        _refuse_concurrent_change(prev, cur, small, "rewrite", "compaction")
         version = cur["version"] + 1
         sid = (max(cur["snapshots"], default=0)) + 1
         seq = cur["last_seq"] + 1
         entries = [dict(e) for e in cur["manifest_entries"]]
         blobs: dict[str, bytes] = {}
-
-        def ml_entry(path: str, blob: bytes, content=0, n_add=0,
-                     n_del=0) -> dict:
-            return {"manifest_path": path, "manifest_length": len(blob),
-                    "sequence_number": seq, "added_snapshot_id": sid,
-                    "content": content, "added_files_count": n_add,
-                    "existing_files_count": 0,
-                    "deleted_files_count": n_del}
-
         # tombstone the compacted data files out of prior manifests
         del_data_manifest = make_manifest(
             [{"status": 2, "snapshot_id": sid, "file_path": p,
@@ -2697,59 +2389,26 @@ def rewrite_data_files_iceberg(
         )
         dd_path = f"metadata/m-{token}-{version}-compact-del.avro"
         blobs[dd_path] = del_data_manifest
-        entries.append(ml_entry(dd_path, del_data_manifest,
-                                n_del=len(small)))
+        entries.append(_ml_entry(dd_path, del_data_manifest, sid, seq,
+                                 n_del=len(small)))
         # tombstone fully-applied delete files
         if drop_deletes:
-            del_del_manifest = make_manifest([
-                {"status": 2, "snapshot_id": sid, "file_path": p,
-                 "record_count": 0, "file_size": 0,
-                 **({"content": 2, "equality_ids": eq_ids_of[p]}
-                    if p in eq_ids_of else {"content": 1})}
-                for p in sorted(drop_deletes)
-            ])
-            ddl_path = f"metadata/m-{token}-{version}-drop-dels.avro"
-            blobs[ddl_path] = del_del_manifest
-            entries.append(ml_entry(ddl_path, del_del_manifest,
-                                    content=1,
-                                    n_del=len(drop_deletes)))
-        add_manifest = make_manifest(
-            [{"status": 1, "snapshot_id": sid,
-              **_ids_bounds(a, field_ids)} for a in adds],
-            partition_fields=part_fields,
-        )
-        add_path = f"metadata/m-{token}-{version}-compact-add.avro"
-        blobs[add_path] = add_manifest
-        entries.append(ml_entry(add_path, add_manifest,
-                                n_add=len(adds)))
-        ml_blob = make_manifest_list(entries)
-        ml_path = f"metadata/ml-{token}-{version}.avro"
-        blobs[ml_path] = ml_blob
-        for rel, blob in blobs.items():
-            with open(os.path.join(table_dir, rel), "wb") as fh:
-                fh.write(blob)
-        snapshots = {**cur["snapshots"], sid: ml_path}
-        meta_text = make_table_metadata(
-            snapshots, current=sid,
-            schema_fields=_carry_schema_fields(cur),
-            properties=cur.get("properties"),
-            partition_spec=cur.get("partition_spec") or None,
-            snapshot_ops={**cur.get("snapshot_ops", {}), sid: "replace"},
-            snapshot_ts=cur.get("snapshot_ts"),
-            table_dir=table_dir,
-            snapshot_parents={**cur.get("snapshot_parents", {}),
-                              sid: cur["current"]},
-            refs=cur.get("refs") or None,
-        )
+            entries.append(_drop_deletes_manifest(
+                drop_deletes, eq_ids_of, sid, seq, token, version, blobs))
+        entries.append(_add_manifest(adds, field_ids, part_fields, sid,
+                                     seq, token, version, blobs,
+                                     kind="compact-add"))
+        ml_path = _write_snapshot_blobs(table_dir, token, version,
+                                        entries, blobs)
+        meta_text = _carried_metadata(
+            table_dir, cur, snapshot=(sid, ml_path, "replace"))
         if _claim_metadata(table_dir, version, meta_text, token, blobs):
             return {"version": version, "snapshot_id": sid,
                     "n_compacted": len(small), "n_files": len(adds),
                     "n_records": sum(a["record_count"] for a in adds),
                     "n_deletes_applied": n_applied,
                     "n_delete_files_dropped": len(drop_deletes)}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 def read_changes_iceberg(
@@ -2889,7 +2548,6 @@ def read_changes_iceberg(
 
 def rewrite_manifests_iceberg(
     table_dir: str,
-    max_retries: int = 10,
 ) -> dict:
     """MANIFEST COMPACTION — Iceberg's ``rewrite_manifests`` (round
     12): consolidate the manifest LIST down to one data manifest (+
@@ -2910,7 +2568,8 @@ def rewrite_manifests_iceberg(
     Returns ``{version, snapshot_id, n_manifests_before,
     n_manifests_after, n_entries}`` (no-op when already ≤2)."""
     token = uuid.uuid4().hex[:12]
-    for _ in range(max_retries):
+
+    def attempt():
         prev = _prev_state(table_dir)
         if len(prev["manifest_entries"]) <= 2:
             return {"version": None, "snapshot_id": None,
@@ -2957,15 +2616,8 @@ def rewrite_manifests_iceberg(
         )
         dm_path = f"metadata/m-{token}-{version}-consolidated.avro"
         blobs = {dm_path: data_manifest}
-        entries = [{
-            "manifest_path": dm_path,
-            "manifest_length": len(data_manifest),
-            "sequence_number": prev["last_seq"],
-            "added_snapshot_id": sid, "content": 0,
-            "added_files_count": 0,
-            "existing_files_count": len(data_entries),
-            "deleted_files_count": 0,
-        }]
+        entries = [_ml_entry(dm_path, data_manifest, sid, prev["last_seq"],
+                             n_exist=len(data_entries))]
         del_entries = [
             {"status": 0, "snapshot_id": sid, "content": 1,
              "sequence_number": prev["position_delete_seqs"].get(p, 0),
@@ -2987,43 +2639,19 @@ def rewrite_manifests_iceberg(
             del_manifest = make_manifest(del_entries)
             dlm_path = f"metadata/m-{token}-{version}-consol-del.avro"
             blobs[dlm_path] = del_manifest
-            entries.append({
-                "manifest_path": dlm_path,
-                "manifest_length": len(del_manifest),
-                "sequence_number": prev["last_seq"],
-                "added_snapshot_id": sid, "content": 1,
-                "added_files_count": 0,
-                "existing_files_count": len(del_entries),
-                "deleted_files_count": 0,
-            })
-        ml_blob = make_manifest_list(entries)
-        ml_path = f"metadata/ml-{token}-{version}.avro"
-        blobs[ml_path] = ml_blob
-        for rel, blob in blobs.items():
-            with open(os.path.join(table_dir, rel), "wb") as fh:
-                fh.write(blob)
-        snapshots = {**prev["snapshots"], sid: ml_path}
-        meta_text = make_table_metadata(
-            snapshots, current=sid,
-            schema_fields=_carry_schema_fields(prev),
-            properties=prev.get("properties"),
-            partition_spec=prev.get("partition_spec") or None,
-            snapshot_ops={**prev.get("snapshot_ops", {}),
-                          sid: "replace"},
-            snapshot_ts=prev.get("snapshot_ts"),
-            table_dir=table_dir,
-            snapshot_parents={**prev.get("snapshot_parents", {}),
-                              sid: prev["current"]},
-            refs=prev.get("refs") or None,
-        )
+            entries.append(_ml_entry(dlm_path, del_manifest, sid,
+                                     prev["last_seq"], content=1,
+                                     n_exist=len(del_entries)))
+        ml_path = _write_snapshot_blobs(table_dir, token, version,
+                                        entries, blobs)
+        meta_text = _carried_metadata(
+            table_dir, prev, snapshot=(sid, ml_path, "replace"))
         if _claim_metadata(table_dir, version, meta_text, token, blobs):
             return {"version": version, "snapshot_id": sid,
                     "n_manifests_before": len(prev["manifest_entries"]),
                     "n_manifests_after": len(entries),
                     "n_entries": len(data_entries) + len(del_entries)}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 #: SQL type spelling -> Spark simpleString (the schema block's
@@ -3042,8 +2670,7 @@ _SQL_TO_SIMPLE = {
 }
 
 
-def add_columns_iceberg(table_dir: str, columns: dict[str, str],
-                        max_retries: int = 10) -> dict:
+def add_columns_iceberg(table_dir: str, columns: dict[str, str]) -> dict:
     """ALTER TABLE ADD COLUMNS (round 14, `add_columns_delta`'s
     format-#2 twin): a metadata-only version bump appending fields
     with FRESH ids past the current maximum (the spec's append-only
@@ -3064,7 +2691,8 @@ def add_columns_iceberg(table_dir: str, columns: dict[str, str],
             )
         typed[name] = st
     token = uuid.uuid4().hex[:12]
-    for _ in range(max_retries):
+
+    def attempt():
         prev = _prev_state(table_dir)
         if prev["version"] < 0 or not prev["field_names"]:
             raise ValueError("cannot ALTER a table with no schema")
@@ -3092,23 +2720,12 @@ def add_columns_iceberg(table_dir: str, columns: dict[str, str],
             fields.append({"id": next_id, "name": n, "type": st})
             next_id += 1
         version = prev["version"] + 1
-        meta_text = make_table_metadata(
-            prev["snapshots"], current=prev["current"],
-            schema_fields=fields,
-            properties=prev.get("properties"),
-            partition_spec=prev.get("partition_spec") or None,
-            snapshot_ops=prev.get("snapshot_ops") or None,
-            snapshot_ts=prev.get("snapshot_ts"),
-            table_dir=table_dir,
-            snapshot_parents=prev.get("snapshot_parents") or None,
-            refs=prev.get("refs") or None,
-        )
+        meta_text = _carried_metadata(table_dir, prev,
+                                      schema_fields=fields)
         if _claim_metadata(table_dir, version, meta_text, token, {}):
             return {"version": version,
                     "n_columns_added": len(typed)}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 #: The spec's name-mapping table property (iceberg.apache.org/spec/
@@ -3197,8 +2814,7 @@ def _refuse_live_eq_delete_refs(prev: dict, fids) -> None:
         )
 
 
-def rename_columns_iceberg(table_dir: str, renames: dict[str, str],
-                           max_retries: int = 10) -> dict:
+def rename_columns_iceberg(table_dir: str, renames: dict[str, str]) -> dict:
     """ALTER TABLE ... RENAME COLUMN, metadata-only (round 15,
     VERDICT r14 next-round #3): the schema is keyed by FIELD IDS, so
     a rename swaps the name at the same id and touches no data file,
@@ -3218,7 +2834,8 @@ def rename_columns_iceberg(table_dir: str, renames: dict[str, str],
     if not renames:
         raise ValueError("RENAME COLUMN needs at least one rename")
     token = uuid.uuid4().hex[:12]
-    for _ in range(max_retries):
+
+    def attempt():
         prev = _prev_state(table_dir)
         if prev["version"] < 0 or not prev["field_names"]:
             raise ValueError("cannot ALTER a table with no schema")
@@ -3256,26 +2873,15 @@ def rename_columns_iceberg(table_dir: str, renames: dict[str, str],
         props = {**(prev.get("properties") or {}),
                  _NAME_MAPPING_PROP: _mapping_prop(mapping)}
         version = prev["version"] + 1
-        meta_text = make_table_metadata(
-            prev["snapshots"], current=prev["current"],
-            schema_fields=fields, properties=props,
-            partition_spec=prev.get("partition_spec") or None,
-            snapshot_ops=prev.get("snapshot_ops") or None,
-            snapshot_ts=prev.get("snapshot_ts"),
-            table_dir=table_dir,
-            snapshot_parents=prev.get("snapshot_parents") or None,
-            refs=prev.get("refs") or None,
-        )
+        meta_text = _carried_metadata(table_dir, prev,
+                                      schema_fields=fields, properties=props)
         if _claim_metadata(table_dir, version, meta_text, token, {}):
             return {"version": version,
                     "n_columns_renamed": len(renames)}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
-def drop_columns_iceberg(table_dir: str, cols: list[str],
-                         max_retries: int = 10) -> dict:
+def drop_columns_iceberg(table_dir: str, cols: list[str]) -> dict:
     """ALTER TABLE ... DROP COLUMN, metadata-only (round 15): the
     field leaves the schema; data files keep the bytes but no reader
     projects them (ids are never reused, so manifest bounds keyed by
@@ -3290,7 +2896,8 @@ def drop_columns_iceberg(table_dir: str, cols: list[str],
     if not cols:
         raise ValueError("DROP COLUMN needs at least one column")
     token = uuid.uuid4().hex[:12]
-    for _ in range(max_retries):
+
+    def attempt():
         prev = _prev_state(table_dir)
         if prev["version"] < 0 or not prev["field_names"]:
             raise ValueError("cannot ALTER a table with no schema")
@@ -3313,22 +2920,12 @@ def drop_columns_iceberg(table_dir: str, cols: list[str],
         props = {**(prev.get("properties") or {}),
                  _NAME_MAPPING_PROP: _mapping_prop(mapping)}
         version = prev["version"] + 1
-        meta_text = make_table_metadata(
-            prev["snapshots"], current=prev["current"],
-            schema_fields=fields, properties=props,
-            partition_spec=prev.get("partition_spec") or None,
-            snapshot_ops=prev.get("snapshot_ops") or None,
-            snapshot_ts=prev.get("snapshot_ts"),
-            table_dir=table_dir,
-            snapshot_parents=prev.get("snapshot_parents") or None,
-            refs=prev.get("refs") or None,
-        )
+        meta_text = _carried_metadata(table_dir, prev,
+                                      schema_fields=fields, properties=props)
         if _claim_metadata(table_dir, version, meta_text, token, {}):
             return {"version": version,
                     "n_columns_dropped": len(cols)}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 # ---------------------------------------------------------------------------
@@ -3342,30 +2939,8 @@ def drop_columns_iceberg(table_dir: str, cols: list[str],
 # ---------------------------------------------------------------------------
 
 
-def _metadata_only_commit(table_dir: str, prev: dict, token: str,
-                          **overrides) -> str:
-    """One carried-forward metadata text with ``overrides`` applied —
-    the shared shape of every pointer-only verb (branch/tag create
-    and drop, fast-forward, cherry-pick publishes add blobs via the
-    normal path)."""
-    kw = dict(
-        snapshots=prev["snapshots"], current=prev["current"],
-        schema_fields=_carry_schema_fields(prev),
-        properties=prev.get("properties"),
-        partition_spec=prev.get("partition_spec") or None,
-        snapshot_ops=prev.get("snapshot_ops") or None,
-        snapshot_ts=prev.get("snapshot_ts"),
-        table_dir=table_dir,
-        snapshot_parents=prev.get("snapshot_parents") or None,
-        refs=prev.get("refs") or None,
-    )
-    kw.update(overrides)
-    return make_table_metadata(**kw)
-
-
 def create_ref_iceberg(table_dir: str, name: str, kind: str = "branch",
-                       snapshot_id: int | None = None,
-                       max_retries: int = 10) -> dict:
+                       snapshot_id: int | None = None) -> dict:
     """Create a BRANCH (writable head) or TAG (immutable label) at
     ``snapshot_id`` (default: the current snapshot).  ``main`` is
     reserved — it IS ``current-snapshot-id``."""
@@ -3377,7 +2952,8 @@ def create_ref_iceberg(table_dir: str, name: str, kind: str = "branch",
             "a named ref"
         )
     token = uuid.uuid4().hex[:12]
-    for _ in range(max_retries):
+
+    def attempt():
         prev = _prev_state(table_dir)
         if prev["version"] < 0:
             raise ValueError("cannot reference an empty table")
@@ -3390,36 +2966,31 @@ def create_ref_iceberg(table_dir: str, name: str, kind: str = "branch",
             )
         refs = {**(prev.get("refs") or {}),
                 name: {"snapshot_id": sid, "type": kind}}
-        meta_text = _metadata_only_commit(table_dir, prev, token,
-                                          refs=refs)
+        meta_text = _carried_metadata(table_dir, prev, refs=refs)
         if _claim_metadata(table_dir, prev["version"] + 1, meta_text,
                            token, {}):
             return {"version": prev["version"] + 1, "ref": name,
                     "type": kind, "snapshot_id": sid}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
-def drop_ref_iceberg(table_dir: str, name: str,
-                     max_retries: int = 10) -> dict:
+def drop_ref_iceberg(table_dir: str, name: str) -> dict:
     """Remove a branch or tag; its snapshots become expirable again."""
     token = uuid.uuid4().hex[:12]
-    for _ in range(max_retries):
+
+    def attempt():
         prev = _prev_state(table_dir)
         refs = dict(prev.get("refs") or {})
         if name not in refs:
             raise ValueError(f"no such ref {name!r}")
         dropped = refs.pop(name)
-        meta_text = _metadata_only_commit(table_dir, prev, token,
-                                          refs=refs or None)
+        meta_text = _carried_metadata(table_dir, prev,
+                                      refs=refs or None)
         if _claim_metadata(table_dir, prev["version"] + 1, meta_text,
                            token, {}):
             return {"version": prev["version"] + 1, "ref": name,
                     "was_snapshot_id": dropped["snapshot_id"]}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 def _ancestry(prev: dict, sid: int) -> list[int]:
@@ -3437,15 +3008,15 @@ def _ancestry(prev: dict, sid: int) -> list[int]:
     return chain
 
 
-def fast_forward_iceberg(table_dir: str, branch: str,
-                         max_retries: int = 10) -> dict:
+def fast_forward_iceberg(table_dir: str, branch: str) -> dict:
     """PUBLISH a branch: move ``current-snapshot-id`` (main) to the
     branch head.  Requires main to be an ANCESTOR of the head (the
     recorded parent chain) — a diverged main cannot be fast-forwarded,
     exactly like the spec's `fast_forward` procedure.  Time travel is
     intact: no snapshot is rewritten, only the pointer moves."""
     token = uuid.uuid4().hex[:12]
-    for _ in range(max_retries):
+
+    def attempt():
         prev = _prev_state(table_dir)
         ref = (prev.get("refs") or {}).get(branch)
         if ref is None or ref["type"] != "branch":
@@ -3461,19 +3032,15 @@ def fast_forward_iceberg(table_dir: str, branch: str,
                 "fast-forward needs a linear history — cherry-pick "
                 "instead"
             )
-        meta_text = _metadata_only_commit(table_dir, prev, token,
-                                          current=head)
+        meta_text = _carried_metadata(table_dir, prev, current=head)
         if _claim_metadata(table_dir, prev["version"] + 1, meta_text,
                            token, {}):
             return {"version": prev["version"] + 1,
                     "snapshot_id": head}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
-def cherry_pick_iceberg(table_dir: str, snapshot_id: int,
-                        max_retries: int = 10) -> dict:
+def cherry_pick_iceberg(table_dir: str, snapshot_id: int) -> dict:
     """PUBLISH one staged APPEND snapshot onto main without moving the
     branch: a NEW snapshot whose manifest list is main's plus the
     manifests the picked snapshot ADDED relative to its parent (their
@@ -3485,7 +3052,8 @@ def cherry_pick_iceberg(table_dir: str, snapshot_id: int,
     from ..operators.avrocf import parse_avro
 
     token = uuid.uuid4().hex[:12]
-    for _ in range(max_retries):
+
+    def attempt():
         prev = _prev_state(table_dir)
         if snapshot_id not in prev["snapshots"]:
             raise ValueError(
@@ -3526,27 +3094,16 @@ def cherry_pick_iceberg(table_dir: str, snapshot_id: int,
         sid = (max(prev["snapshots"], default=0)) + 1
         entries = ([dict(e) for e in prev["manifest_entries"]]
                    + [dict(e) for e in added])
-        ml_blob = make_manifest_list(entries)
         version = prev["version"] + 1
-        ml_path = f"metadata/ml-{token}-{version}.avro"
-        with open(os.path.join(table_dir, ml_path), "wb") as fh:
-            fh.write(ml_blob)
-        meta_text = _metadata_only_commit(
-            table_dir, prev, token,
-            snapshots={**prev["snapshots"], sid: ml_path},
-            current=sid,
-            snapshot_ops={**(prev.get("snapshot_ops") or {}),
-                          sid: "append"},
-            snapshot_parents={**prev.get("snapshot_parents", {}),
-                              sid: prev["current"]},
-        )
-        if _claim_metadata(table_dir, version, meta_text, token,
-                           {ml_path: ml_blob}):
+        blobs: dict[str, bytes] = {}
+        ml_path = _write_snapshot_blobs(table_dir, token, version,
+                                        entries, blobs)
+        meta_text = _carried_metadata(table_dir, prev,
+                                      snapshot=(sid, ml_path, "append"))
+        if _claim_metadata(table_dir, version, meta_text, token, blobs):
             return {"version": version, "snapshot_id": sid,
                     "n_manifests_picked": len(added)}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 def _branch_overlay(table_dir: str, prev: dict,
@@ -3727,8 +3284,7 @@ def expire_snapshots_plan(table_dir: str, retain_last: int = 1,
     }
 
 
-def rollback_iceberg(table_dir: str, snapshot_id: int,
-                     max_retries: int = 10) -> dict:
+def rollback_iceberg(table_dir: str, snapshot_id: int) -> dict:
     """ROLLBACK: point the table back at an earlier snapshot — a NEW
     metadata version whose current-snapshot-id is ``snapshot_id``
     (Iceberg's rollback_to_snapshot: metadata-only, history kept,
@@ -3737,7 +3293,8 @@ def rollback_iceberg(table_dir: str, snapshot_id: int,
 
     Returns ``{version, snapshot_id}``."""
     token = uuid.uuid4().hex[:12]
-    for _ in range(max_retries):
+
+    def attempt():
         prev = _prev_state(table_dir)
         if snapshot_id not in prev["snapshots"]:
             raise ValueError(
@@ -3745,28 +3302,15 @@ def rollback_iceberg(table_dir: str, snapshot_id: int,
                 f"(have {sorted(prev['snapshots'])})"
             )
         version = prev["version"] + 1
-        meta_text = make_table_metadata(
-            prev["snapshots"], current=snapshot_id,
-            schema_fields=_carry_schema_fields(prev),
-            properties=prev.get("properties"),
-            partition_spec=prev.get("partition_spec") or None,
-            snapshot_ops=prev.get("snapshot_ops") or None,
-            snapshot_ts=prev.get("snapshot_ts"),
-            table_dir=table_dir,
-            snapshot_parents=prev.get("snapshot_parents") or None,
-            refs=prev.get("refs") or None,
-        )
+        meta_text = _carried_metadata(table_dir, prev, current=snapshot_id)
         if _claim_metadata(table_dir, version, meta_text, token, {}):
             return {"version": version, "snapshot_id": snapshot_id}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 def expire_snapshots_iceberg(
     table_dir: str,
     retain_last: int = 1,
-    max_retries: int = 10,
     older_than_hours: float | None = None,
 ) -> dict:
     """EXECUTE snapshot expiration: commit a new metadata version
@@ -3784,7 +3328,8 @@ def expire_snapshots_iceberg(
     if not plan["expired"]:
         return {**plan, "version": None}
     token = uuid.uuid4().hex[:12]
-    for _ in range(max_retries):
+
+    def attempt():
         prev = _prev_state(table_dir)
         snapshots = {
             sid: ml for sid, ml in prev["snapshots"].items()
@@ -3795,23 +3340,16 @@ def expire_snapshots_iceberg(
                 "concurrent commit moved the current snapshot; re-plan"
             )
         version = prev["version"] + 1
-        meta_text = make_table_metadata(
-            snapshots, current=prev["current"],
-            schema_fields=_carry_schema_fields(prev),
-            properties=prev.get("properties"),
-            partition_spec=prev.get("partition_spec") or None,
+        meta_text = _carried_metadata(
+            table_dir, prev, snapshots=snapshots,
             snapshot_ops={
                 sid: op
                 for sid, op in (prev.get("snapshot_ops") or {}).items()
                 if sid in snapshots
             } or None,
-            snapshot_ts=prev.get("snapshot_ts"),
-            table_dir=table_dir,
-            snapshot_parents=prev.get("snapshot_parents") or None,
-            refs=prev.get("refs") or None,
         )
         if not _claim_metadata(table_dir, version, meta_text, token, {}):
-            continue
+            return None
         reclaimed = 0
         for rel in (plan["reclaimable_files"]
                     + plan["reclaimable_manifests"]
@@ -3824,9 +3362,7 @@ def expire_snapshots_iceberg(
                 pass  # already gone: expiration is idempotent
         return {**plan, "version": version,
                 "bytes_reclaimed": reclaimed}
-    raise ValueError(
-        f"lost {max_retries} version claims in a row; giving up"
-    )
+    return commit_with_retries(attempt)
 
 
 def remove_orphan_files_iceberg(

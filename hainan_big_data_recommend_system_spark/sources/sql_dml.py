@@ -4,7 +4,7 @@ What's missing #4): ``DELETE FROM``, ``UPDATE ... SET`` and
 the SQL surface no longer stops at SELECT.  The grammar is the
 disciplined subset the verbs implement — parsed with the same
 quote-aware scanners the predicate analyzer uses
-(`delta_sink._top_level_conjuncts` / `_split_in_list`) and REFUSED
+(`lake_core._top_level_conjuncts` / `_split_in_list`) and REFUSED
 loudly on anything outside it (a silently narrowed statement would
 delete the wrong rows).
 
@@ -44,7 +44,7 @@ from __future__ import annotations
 import os
 import re
 
-from .delta_sink import _split_in_list, _top_level_conjuncts
+from .lake_core import _split_in_list, _top_level_conjuncts
 
 _INSERT_RE = re.compile(
     r"^\s*INSERT\s+INTO\s+([A-Za-z_][A-Za-z0-9_.]*)\s+"
@@ -371,35 +371,15 @@ def _align_insert_columns(spark, rows, table_dir: str | None,
     and cast to the table's declared non-generated columns when the
     arity matches; pass through untouched otherwise (write-side
     schema enforcement stays the loud gate)."""
-    import json as _json
-
     from pyspark.sql import functions as F
 
     if table_dir is None:
         return rows
-    declared: list[tuple[str, object]] = []
-    gen: set[str] = set()
     if fmt == "delta":
-        from .delta_sink import _generated_transforms, snapshot
-
-        snap = snapshot(table_dir)
-        if snap.get("schema_json"):
-            declared = [
-                (f["name"], f["type"])
-                for f in _json.loads(snap["schema_json"])["fields"]
-                if isinstance(f.get("type"), str)
-            ]
-            gen = {f["name"] for f in _generated_transforms(snap)}
+        from .delta_sink import insert_columns
     else:
-        from .iceberg_sink import _prev_state
-
-        prev = _prev_state(table_dir)
-        types = prev.get("field_types", {})
-        declared = [
-            (n, types.get(i))
-            for i, n in sorted(prev.get("field_names", {}).items())
-        ]
-    expected = [(n, t) for n, t in declared if n not in gen]
+        from .iceberg_sink import insert_columns
+    expected = insert_columns(table_dir)
     if not expected or len(rows.columns) != len(expected):
         return rows
     return rows.select(*[

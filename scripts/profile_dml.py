@@ -49,7 +49,8 @@ for nm in ("_build_dv_updates", "_stage_cdc_files", "_stage_data_files",
            "_dead_positions_df"):
     timed(ds, nm)
 for nm in ("_alive_rows_with_positions", "_prev_state",
-           "_stage_position_delete_files"):
+           "_stage_position_delete_files", "_scan_with_positions",
+           "_prune_dml_paths"):
     timed(ice, nm)
 
 

@@ -33,8 +33,10 @@ from hainan_big_data_recommend_system_spark.sources.delta_sink import (
     optimize_delta,
     read_log_commits,
     snapshot,
-    unescape_path_name,
     write_delta,
+)
+from hainan_big_data_recommend_system_spark.sources.lake_core import (
+    unescape_path_name,
 )
 
 

@@ -30,15 +30,17 @@ from pyspark.sql import functions as F
 from hainan_big_data_recommend_system_spark.sources import delta_sink
 from hainan_big_data_recommend_system_spark.sources.delta_sink import (
     _maybe_checkpoint,
+    delete_where_delta,
+    merge_delta,
+    snapshot,
+    write_delta,
+)
+from hainan_big_data_recommend_system_spark.sources.lake_core import (
     _prune_dml_paths,
     _split_in_list,
     _stats_prunable,
     analyze_condition,
-    delete_where_delta,
-    merge_delta,
     parse_replace_where,
-    snapshot,
-    write_delta,
 )
 from hainan_big_data_recommend_system_spark.sources.iceberg_sink import (
     _posdel_targets,

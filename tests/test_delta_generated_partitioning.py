@@ -16,13 +16,15 @@ import pytest
 
 from hainan_big_data_recommend_system_spark.sources.delta_sink import (
     _generated_transforms,
-    _prune_dml_paths,
     delete_where_delta,
     merge_delta,
     read_delta_table,
     snapshot,
     update_where_delta,
     write_delta,
+)
+from hainan_big_data_recommend_system_spark.sources.lake_core import (
+    _prune_dml_paths,
 )
 
 

@@ -14,13 +14,15 @@ from pyspark.sql import functions as F
 
 from hainan_big_data_recommend_system_spark.sources import delta_sink
 from hainan_big_data_recommend_system_spark.sources.delta_sink import (
-    _prune_dml_paths,
-    analyze_condition,
     delete_where_delta,
     read_log_commits,
     snapshot,
     update_where_delta,
     write_delta,
+)
+from hainan_big_data_recommend_system_spark.sources.lake_core import (
+    _prune_dml_paths,
+    analyze_condition,
 )
 
 

@@ -19,25 +19,27 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from hainan_big_data_recommend_system_spark.sources.delta_sink import (
+from hainan_big_data_recommend_system_spark.sources.lake_core import (
     _prune_dml_paths,
 )
 from hainan_big_data_recommend_system_spark.sources.iceberg_sink import (
     _add_bucket_column,
     _declared_types,
     _prev_state,
-    bucket_value,
     delete_where_iceberg,
     merge_iceberg,
-    murmur3_32,
     read_iceberg_table,
-    parse_partition_transforms,
     read_table,
     rewrite_data_files_iceberg,
-    transform_constraint_spellings,
-    transform_spelling,
     update_where_iceberg,
     write_iceberg,
+)
+from hainan_big_data_recommend_system_spark.sources.lake_core import (
+    bucket_value,
+    murmur3_32,
+    parse_partition_transforms,
+    transform_constraint_spellings,
+    transform_spelling,
 )
 
 

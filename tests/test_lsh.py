@@ -145,3 +145,17 @@ def test_dim_mismatch_fails_fast(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     with pytest.raises(ValueError, match="dim"):
         lsh_signatures(emb, "vec_id", "embedding", pinned_hyperplanes(2, 4, 32))
+
+
+def test_sparse_planes_rejected(spark, sf_dir):
+    """The kernel reshapes plane dots to (tables, bits), which is the
+    signature only for a dense (t, j) grid: a missing plane, a skipped
+    table or a repeated pair must raise instead of shifting bits."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    dense = pinned_hyperplanes(3, 4, 64)
+    missing_bit = [p for p in dense if (p[0], p[1]) != (1, 2)]
+    skipped_table = [p for p in dense if p[0] != 1]
+    repeated = missing_bit + [dense[0]]
+    for planes in (missing_bit, skipped_table, repeated):
+        with pytest.raises(ValueError, match="grid"):
+            lsh_signatures(emb, "vec_id", "embedding", planes)

@@ -424,3 +424,28 @@ def test_multimodal_meta_oracle_handles_empty_text(spark, tmp_path):
     )
     spec = REGISTRY["multimodal_meta"]
     compare(spec.fn(spark, sf), con, spec.oracle, "multimodal_meta[empty-text]")
+
+
+def test_multimodal_meta_null_text(spark, tmp_path):
+    """A NULL document has no bytes: the fused kernel must emit NULL
+    n_bytes / content_sha256 and size class 'small' (what the SQL
+    length/sha2 columns give), never the digest of the text 'None'.
+    The shipped fixtures hold no NULL text, so no oracle row sees it."""
+    import hashlib
+
+    from hainan_big_data_recommend_system_spark.qcatalog import REGISTRY
+
+    sf = str(tmp_path / "sf_null")
+    spark.createDataFrame(
+        [(1, "hello"), (2, None)], "doc_id long, text string"
+    ).write.parquet(f"{sf}/documents.parquet")
+    rows = {
+        r["doc_id"]: r
+        for r in REGISTRY["multimodal_meta"].fn(spark, sf).collect()
+    }
+    assert sorted(rows) == [1, 2]
+    assert rows[1]["n_bytes"] == 5
+    assert rows[1]["content_sha256"] == hashlib.sha256(b"hello").hexdigest()
+    assert rows[2]["n_bytes"] is None
+    assert rows[2]["content_sha256"] is None
+    assert rows[2]["size_class"] == "small"

@@ -13,12 +13,14 @@ import os
 import pytest
 
 from hainan_big_data_recommend_system_spark.sources.delta_sink import (
-    _prune_dml_paths,
-    analyze_condition,
     delete_where_delta,
     read_delta_table,
     snapshot,
     write_delta,
+)
+from hainan_big_data_recommend_system_spark.sources.lake_core import (
+    _prune_dml_paths,
+    analyze_condition,
 )
 
 

@@ -724,8 +724,10 @@ def test_transform_partition_derivation_is_jvm_side(spark):
     from pyspark.sql import functions as F
 
     from hainan_big_data_recommend_system_spark.sources.iceberg_sink import (
-        parse_partition_transforms,
         with_transform_columns,
+    )
+    from hainan_big_data_recommend_system_spark.sources.lake_core import (
+        parse_partition_transforms,
     )
 
     df = spark.range(0, 100).select(
@@ -751,9 +753,11 @@ def test_merge_residual_pair_join_is_broadcast(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from hainan_big_data_recommend_system_spark.sources.delta_sink import (
-        _scan_with_positions,
         snapshot,
         write_delta,
+    )
+    from hainan_big_data_recommend_system_spark.sources.lake_core import (
+        _scan_with_positions,
     )
 
     tbl = str(tmp_path / "t")

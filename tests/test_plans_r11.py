@@ -11,9 +11,11 @@ import pytest
 
 import hainan_big_data_recommend_system_spark.qcatalog as qc
 from hainan_big_data_recommend_system_spark.sources.delta_sink import (
+    write_delta,
+)
+from hainan_big_data_recommend_system_spark.sources.lake_core import (
     _attach_partition_columns,
     _scan_with_positions,
-    write_delta,
 )
 
 SF_DIR = "/root/testdata/sf0.01"

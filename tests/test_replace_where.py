@@ -12,9 +12,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from hainan_big_data_recommend_system_spark.sources.delta_sink import (
-    parse_replace_where,
     snapshot,
     write_delta,
+)
+from hainan_big_data_recommend_system_spark.sources.lake_core import (
+    parse_replace_where,
 )
 
 

@@ -199,7 +199,7 @@ def test_string_bounds_truncate_like_real_writers(spark, tmp_path):
     from hainan_big_data_recommend_system_spark.operators.deltalog import (
         prune_live_files,
     )
-    from hainan_big_data_recommend_system_spark.sources.delta_sink import (
+    from hainan_big_data_recommend_system_spark.sources.lake_core import (
         _truncate_upper,
     )
 

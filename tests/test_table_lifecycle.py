@@ -206,7 +206,7 @@ def test_concurrent_appends_all_land_exactly_once(spark, tmp_path):
 
     def run(k):
         try:
-            write_delta(frames[k], tbl, max_retries=50)
+            write_delta(frames[k], tbl)
         except Exception as ex:  # pragma: no cover - failure reporter
             errors.append((k, ex))
 
@@ -239,7 +239,7 @@ def test_concurrent_iceberg_appends_all_land(spark, tmp_path):
 
     def run(k):
         try:
-            write_iceberg(frames[k], tbl, max_retries=50)
+            write_iceberg(frames[k], tbl)
         except Exception as ex:  # pragma: no cover
             errors.append((k, ex))
 
